@@ -145,11 +145,7 @@ class DeltaCdcConnector:
         self.start = Checkpoint(state=state, snapshot_version=version)
         return self.start
 
-    def _envelope(self, df: DataFrame, version: int) -> DataFrame:
-        pcols = self.table.snapshot(version).partition_columns
-        if "partition_value" not in df.columns:
-            pv = partition_value_expr({c: F.col(c) for c in pcols}) if pcols else F.lit("")
-            df = df.withColumn("partition_value", pv)
+    def _envelope(self, df: DataFrame) -> DataFrame:
         from pulsar_io_delta_spark.functions.murmur3 import with_route_lowcard
 
         # partition_value cardinality ~ number of table partitions:
@@ -163,32 +159,44 @@ class DeltaCdcConnector:
         records (`DeltaReader.java:174-184`)."""
         v = self.start.snapshot_version
         snap_df = self.table.read(spark, version=v)
-        ts_ms = max(self.table.snapshot(v).add_times.values(), default=0)
+        snap = self.table.snapshot(v)
+        ts_ms = max(snap.add_times.values(), default=0)
+        pcols = snap.partition_columns
         df = (
             snap_df.withColumn("op", F.lit(OP_INSERT))
             .withColumn("ts", F.timestamp_millis(F.lit(ts_ms)))
             .withColumn("_commit_version", F.lit(v))
+            .withColumn(
+                "partition_value",
+                partition_value_expr({c: F.col(c) for c in pcols}) if pcols else F.lit(""),
+            )
         )
-        return self._envelope(df, v)
+        return self._envelope(df)
 
-    def tail(self, spark: SparkSession, from_version: int | None = None) -> DataFrame:
-        """INCREMENTAL_COPY phase: change feed from the checkpointed
-        version (`DeltaReader.java:185-251`, all versions ≥ start)."""
+    def tail(
+        self,
+        spark: SparkSession,
+        from_version: int | None = None,
+        end_version: int | None = None,
+    ) -> DataFrame:
+        """INCREMENTAL_COPY phase: change feed of the versions in
+        [from_version (default: the checkpointed one), end_version]
+        (`DeltaReader.java:185-251`)."""
         v = self.start.snapshot_version if from_version is None else from_version
-        return self._envelope(self.table.cdc(spark, start_version=v), v)
+        return self._envelope(self.table.cdc(spark, start_version=v, end_version=end_version))
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The connector's full record stream from its start checkpoint:
         bootstrap ∪ tail-after-bootstrap (or tail only)."""
         self.open()
+        latest = self.table.latest_version()
         if self.start.state == FULL_COPY:
             boot = self.bootstrap(spark)
-            later = self.table.versions()[-1] > self.start.snapshot_version
-            if later:
-                inc = self.tail(spark, self.start.snapshot_version + 1)
+            if latest > self.start.snapshot_version:
+                inc = self.tail(spark, self.start.snapshot_version + 1, latest)
                 return boot.unionByName(inc, allowMissingColumns=True)
             return boot
-        return self.tail(spark)
+        return self.tail(spark, end_version=latest)
 
     def poll(self, spark: SparkSession, cursor: Checkpoint) -> tuple[DataFrame | None, Checkpoint]:
         """One micro-batch of the incremental loop: records committed
@@ -201,7 +209,7 @@ class DeltaCdcConnector:
         frm = cursor.snapshot_version + (0 if cursor.state == FULL_COPY else 1)
         if latest < frm:
             return None, cursor
-        df = self._envelope(self.table.cdc(spark, start_version=frm), latest)
+        df = self.tail(spark, frm, latest)
         return df, Checkpoint(state=INCREMENTAL_COPY, snapshot_version=latest)
 
     def run(self, spark: SparkSession, sink, max_polls: int = 1) -> Checkpoint:

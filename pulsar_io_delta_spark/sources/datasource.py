@@ -121,10 +121,13 @@ def _version_bounds(table_path: str, options) -> tuple[int, int | None]:
     return start, end
 
 
-def _canonical_pv(partition_values: dict[str, str]) -> str:
-    """TreeMap-sorted k=v concatenation, no pair separator
-    (reference `DeltaReader.java:290-299`)."""
-    return "".join(f"{k}={partition_values[k]}" for k in sorted(partition_values))
+def _canonical_pv(partition_values: dict[str, str | None]) -> str:
+    """TreeMap-sorted k=v concatenation, no pair separator, a null value
+    as ``null`` (reference `DeltaReader.java:290-299`)."""
+    return "".join(
+        f"{k}={'null' if partition_values[k] is None else partition_values[k]}"
+        for k in sorted(partition_values)
+    )
 
 
 @dataclass
@@ -134,7 +137,7 @@ class _FileSlice(InputPartition):
     op: str
     version: int
     ts_ms: int
-    partition_values: tuple[tuple[str, str], ...]
+    partition_values: tuple[tuple[str, str | None], ...]
     # log-recorded file size (bytes); drives maxBytesPerTrigger
     # admission without touching the filesystem
     size: int = 0
@@ -147,96 +150,47 @@ def _plan_slices(
     change_feed: bool = False,
     filters: list[tuple[str, str, object]] | None = None,
 ) -> list[_FileSlice]:
-    """File-level input partitions for commits in [start, end].
+    """One input partition per file `DeltaTable.plan_changes` reports for
+    commits in [start, end] (``change_feed``: option ``readChangeFeed``).
 
-    ``change_feed`` (option ``readChangeFeed``): commits carrying cdc
-    actions contribute ONLY their ``_change_data`` files (op='cdf'; the
-    file's own ``_change_type`` column carries exact semantics incl.
-    MERGE pre/post images); other commits derive insert/delete from
-    add/remove exactly like the op stream.
-
-    Deletion-vector guard: a derived slice over a DV-carrying add would
+    Deletion-vector guard: a derived slice over a DV-carrying file would
     emit the file's DELETED rows too (this arrow path reads whole
     files) — refuse loudly instead of silently over-reporting; CDF
     tables never hit this because their DV deletes carry cdc actions."""
     from pulsar_io_delta_spark.sources.delta_log import DeltaTable, _stats_admit
 
-    def _admit(action: dict) -> bool:
+    def _admit(c) -> bool:
         """Data-skip a slice: partition values (exact on '=') + footer
         min/max stats, conservative on anything missing — the same gate
         DeltaTable.prune_files applies to batch reads."""
-        if not filters:
-            return True
-        pvals = action.get("partitionValues") or {}
         for col, op, val in filters:
-            if col in pvals and op == "=" and pvals[col] != str(val):
+            if col in c.partition_values and op == "=" and c.partition_values[col] != str(val):
                 return False
-        return _stats_admit(action, filters)
+        return _stats_admit(c.stats, filters)
 
-    t = DeltaTable(table_path)
     slices: list[_FileSlice] = []
-    for version, actions in t.changes(start_version):
-        if version > end_version:
-            break
-        cdc_actions = [a["cdc"] for a in actions if "cdc" in a] if change_feed else []
-        if cdc_actions:
-            ts_ms = next(
-                (
-                    int(a["commitInfo"]["timestamp"])
-                    for a in actions
-                    if a.get("commitInfo", {}).get("timestamp") is not None
-                ),
-                0,
-            )
-            for c in cdc_actions:
-                if not _admit(c):
-                    continue
-                slices.append(
-                    _FileSlice(
-                        table_path=table_path,
-                        rel_path=c["path"],
-                        op="cdf",
-                        version=version,
-                        ts_ms=ts_ms,
-                        partition_values=tuple(
-                            sorted((c.get("partitionValues") or {}).items())
-                        ),
-                        size=int(c.get("size") or 0),
-                    )
-                )
+    plan = DeltaTable(table_path).plan_changes(start_version, end_version, change_feed)
+    for c in plan.changes:
+        if filters and not _admit(c):
             continue
-        for action in actions:
-            if "add" in action:
-                a, op, ts_key = action["add"], "c", "modificationTime"
-            elif "remove" in action:
-                a, op, ts_key = action["remove"], "r", "deletionTimestamp"
-            else:
-                continue
-            if not a.get("dataChange", True):
-                # OPTIMIZE/compaction rewrites move bytes without changing
-                # data; mirroring DeltaTable.cdc(), they are invisible here.
-                continue
-            if not _admit(a):
-                continue
-            dv = a.get("deletionVector")
-            if dv and int(dv.get("cardinality") or 0) > 0:
-                raise ValueError(
-                    "pulsar_delta_cdc cannot derive changes from a "
-                    f"deletion-vector file ({a['path']}): whole-file reads "
-                    "would resurrect deleted rows; use DeltaTable.cdc()/"
-                    "table_changes(), or enable delta.enableChangeDataFeed"
-                )
-            slices.append(
-                _FileSlice(
-                    table_path=table_path,
-                    rel_path=a["path"],
-                    op=op,
-                    version=version,
-                    ts_ms=int(a.get(ts_key) or 0),
-                    partition_values=tuple(sorted((a.get("partitionValues") or {}).items())),
-                    size=int(a.get("size") or 0),
-                )
+        if c.dv:
+            raise ValueError(
+                "pulsar_delta_cdc cannot derive changes from a "
+                f"deletion-vector file ({c.path}): whole-file reads "
+                "would resurrect deleted rows; use DeltaTable.cdc()/"
+                "table_changes(), or enable delta.enableChangeDataFeed"
             )
+        slices.append(
+            _FileSlice(
+                table_path=table_path,
+                rel_path=c.path,
+                op=c.op,
+                version=c.version,
+                ts_ms=c.ts_ms,
+                partition_values=tuple(sorted(c.partition_values.items())),
+                size=c.size,
+            )
+        )
     return slices
 
 
@@ -436,6 +390,10 @@ class _CdcStreamReader(DataSourceStreamReader):
         # to ``start``; partitions()/commit() re-seed it from the
         # checkpointed range after a restart.
         self._next_unread: tuple[int, int] | None = None
+        # the last commit the capped walk planned: a trigger that stops
+        # inside (or just before) it resumes there on the next call, and
+        # a committed version's slices never change
+        self._planned: tuple[int, list[_FileSlice]] | None = None
 
     @staticmethod
     def _pos(offset: dict) -> tuple[int, int]:
@@ -445,9 +403,12 @@ class _CdcStreamReader(DataSourceStreamReader):
         self._next_unread = max(self._next_unread or (0, 0), pos)
 
     def _version_slices(self, version: int) -> list[_FileSlice]:
-        return _plan_slices(
-            self.table_path, version, version, change_feed=self.change_feed
-        )
+        if self._planned is None or self._planned[0] != version:
+            self._planned = (
+                version,
+                _plan_slices(self.table_path, version, version, change_feed=self.change_feed),
+            )
+        return self._planned[1]
 
     def initialOffset(self) -> dict:
         self._seed((self.start, 0))
@@ -566,6 +527,8 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
                 "size": os.path.getsize(abs_path),
                 "modificationTime": int(_time.time() * 1000),
                 "dataChange": True,
+                # row tracking assigns ids from numRecords
+                "stats": json.dumps({"numRecords": len(rows)}),
             }
         )
     return _WroteFiles(adds=tuple(adds))

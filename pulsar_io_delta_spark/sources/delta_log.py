@@ -52,6 +52,7 @@ import re
 import time
 import uuid
 from collections.abc import Mapping
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -266,10 +267,10 @@ def _file_stats(source, indexed: "frozenset | None" = None) -> dict:
     return {"numRecords": md.num_rows, "minValues": _norm(mins), "maxValues": _norm(maxs)}
 
 
-def _stats_admit(add: dict, filters: list[tuple[str, str, object]]) -> bool:
-    """True if the file might contain rows matching all filters
-    (conservative: missing stats admit the file)."""
-    stats = add.get("stats")
+def _stats_admit(stats, filters: list[tuple[str, str, object]]) -> bool:
+    """True if a file with these footer ``stats`` (JSON string or dict)
+    might contain rows matching all filters (conservative: missing stats
+    admit the file)."""
     if not stats:
         return True
     s = json.loads(stats) if isinstance(stats, str) else stats
@@ -315,8 +316,10 @@ class Snapshot:
         protocol: dict | None = None,
         domain_metadata: dict[str, dict] | None = None,
         store: "_LiveStore | None" = None,
+        table_id: str | None = None,
     ):
         self.version = version
+        self.table_id = table_id  # metaData.id: the table's identity
         self.schema_string = schema_string
         self.partition_columns = list(partition_columns or [])
         self.configuration = dict(configuration or {})
@@ -1750,6 +1753,49 @@ class _PruneIndex:
         return sorted(self._paths_col.filter(pa.array(admit)).to_pylist())
 
 
+def _commit_info_ms(info: dict | None) -> int | None:
+    """A commit's own clock from its commitInfo: the inCommitTimestamp
+    when the commit carries one (monotone, authoritative), else the
+    writer's wall ``timestamp``; None without either."""
+    if info and "inCommitTimestamp" in info:
+        return int(info["inCommitTimestamp"])
+    if info and "timestamp" in info:
+        return int(info["timestamp"])
+    return None
+
+
+# op of a change-data file: its rows carry their own _change_type
+OP_CHANGE_FILE = "cdf"
+
+
+@dataclass
+class FileChange:
+    """One changed file of one commit, as `DeltaTable.plan_changes` emits it."""
+
+    version: int
+    op: str  # OP_INSERT, OP_DELETE or OP_CHANGE_FILE
+    path: str
+    ts_ms: int
+    partition_values: dict
+    size: int
+    dv: dict | None  # deletion-vector descriptor; None when it deletes no rows
+    stats: object  # footer stats as logged (JSON string or dict), or None
+    epoch: int
+
+
+@dataclass
+class ChangePlan:
+    """`DeltaTable.plan_changes` output: the changed files in log order,
+    each commit's timestamp, and each schema epoch's (partitionColumns,
+    schemaString, configuration). ``epochs[0]`` is whatever was in effect
+    entering the range; it is None until a reader takes it from a
+    snapshot (the stream source never needs it)."""
+
+    changes: list[FileChange] = field(default_factory=list)
+    commit_ts: dict[int, int] = field(default_factory=dict)
+    epochs: list[tuple | None] = field(default_factory=lambda: [None])
+
+
 class DeltaTable:
     def __init__(self, path: str, fs: FileSystem | None = None):
         self.path = path
@@ -1942,11 +1988,9 @@ class DeltaTable:
         for line in self.fs.read_text(fp).splitlines():
             if not line.strip() or '"commitInfo"' not in line:
                 continue
-            info = json.loads(line).get("commitInfo")
-            if info and "inCommitTimestamp" in info:
-                return int(info["inCommitTimestamp"])
-            if info and "timestamp" in info:
-                return int(info["timestamp"])
+            ms = _commit_info_ms(json.loads(line).get("commitInfo"))
+            if ms is not None:
+                return ms
         return None
 
     def commit_timestamp_ms(self, version: int) -> int:
@@ -2064,6 +2108,7 @@ class DeltaTable:
         configuration: dict = {}
         protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
         domains: dict[str, dict] = {}
+        table_id: str | None = None
         replay_from = 0
         usable_ckpts = [c for c in self.checkpoint_versions() if c <= v]
         if usable_ckpts:
@@ -2075,6 +2120,7 @@ class DeltaTable:
             configuration = dict(ck.get("configuration") or {})
             protocol = dict(ck.get("protocol") or protocol)
             domains = dict(ck.get("domain_metadata") or {})
+            table_id = ck.get("table_id")
             replay_from = usable_ckpts[-1] + 1
         # minor log compactions: a range file standing in for its
         # commits — replay reads ONE file and jumps past the range
@@ -2106,6 +2152,7 @@ class DeltaTable:
                     schema_string = action["metaData"].get("schemaString")
                     partition_columns = action["metaData"].get("partitionColumns", [])
                     configuration = dict(action["metaData"].get("configuration") or {})
+                    table_id = action["metaData"].get("id")
                 elif "protocol" in action:
                     protocol = action["protocol"]
                     _check_protocol(protocol)
@@ -2123,6 +2170,7 @@ class DeltaTable:
             protocol=protocol,
             domain_metadata=domains,
             store=_LiveStore(bases, overlay, removed),
+            table_id=table_id,
         )
         if v not in self._crc_checked:
             # once per (table handle, version): the committer's .crc
@@ -2167,7 +2215,7 @@ class DeltaTable:
                 ):
                     admit = False
                     break
-            if admit and _stats_admit(snap.adds.get(p, {}), filters):
+            if admit and _stats_admit(snap.adds.get(p, {}).get("stats"), filters):
                 out.append(p)
         return out
 
@@ -2213,6 +2261,7 @@ class DeltaTable:
         rows: list[dict] = [
             {
                 "action_type": "metaData",
+                "tableId": snap.table_id,
                 "schemaString": snap.schema_string,
                 "partitionColumns": json.dumps(snap.partition_columns),
                 "configuration": json.dumps(snap.configuration),
@@ -2266,6 +2315,7 @@ class DeltaTable:
             "size",
             "modificationTime",
             "stats",
+            "tableId",
             "schemaString",
             "partitionColumns",
             "configuration",
@@ -2317,7 +2367,7 @@ class DeltaTable:
             {"protocol": dict(snap.protocol)},
             {
                 "metaData": {
-                    "id": str(uuid.uuid4()),
+                    "id": snap.table_id or str(uuid.uuid4()),
                     "format": {"provider": "parquet", "options": {}},
                     "schemaString": snap.schema_string,
                     "partitionColumns": snap.partition_columns,
@@ -2532,10 +2582,12 @@ class DeltaTable:
         protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
         txns: dict[str, int] = {}
         domains: dict[str, dict] = {}
+        table_id = None
         for a in action_dicts:
             if "add" in a:
                 live[a["add"]["path"]] = a["add"]
             elif "metaData" in a:
+                table_id = a["metaData"].get("id")
                 schema_string = a["metaData"].get("schemaString")
                 partition_columns = a["metaData"].get("partitionColumns") or []
                 configuration = dict(a["metaData"].get("configuration") or {})
@@ -2563,6 +2615,7 @@ class DeltaTable:
             "protocol": protocol,
             "txns": txns,
             "domain_metadata": domains,
+            "table_id": table_id,
             # spec checkpoints carry no commit timestamp — file mtime is
             # the same approximation every vacuum/time-travel impl uses
             "timestamp": self.fs.mtime_ms(files[0]),
@@ -2580,10 +2633,12 @@ class DeltaTable:
         protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
         txns: dict[str, int] = {}
         domains: dict[str, dict] = {}
+        table_id = None
         ts = 0
         for r in rows:
             ts = int(r.get("commit_timestamp") or 0)
             if r["action_type"] == "metaData":
+                table_id = r.get("tableId")
                 schema_string = r["schemaString"]
                 partition_columns = json.loads(r["partitionColumns"] or "[]")
                 configuration = json.loads(r.get("configuration") or "{}")
@@ -2609,6 +2664,7 @@ class DeltaTable:
             "protocol": protocol,
             "txns": txns,
             "domain_metadata": domains,
+            "table_id": table_id,
             "timestamp": ts,
         }
 
@@ -3180,10 +3236,13 @@ class DeltaTable:
 
     # ---------- change feed / CDC ----------
 
-    def changes(self, start_version: int = 0) -> list[tuple[int, list[dict]]]:
-        """All commits with version ≥ start_version, in order. History
-        behind an expired (checkpoint-collapsed) log tail raises — a
-        CDC consumer cannot silently skip changes."""
+    def changes(
+        self, start_version: int = 0, end_version: int | None = None
+    ) -> list[tuple[int, list[dict]]]:
+        """All commits in [start_version, end_version] (no upper bound
+        when None), in order; commits past the bound are never parsed.
+        History behind an expired (checkpoint-collapsed) log tail raises
+        — a CDC consumer cannot silently skip changes."""
         jsons = self.json_versions()
         earliest = jsons[0] if jsons else None
         expired_horizon = max(
@@ -3195,180 +3254,231 @@ class DeltaTable:
                 f"change history ≤ v{expired_horizon} was expired; "
                 f"earliest readable commit is v{earliest}"
             )
-        return [(v, self.actions(v)) for v in jsons if v >= start_version]
+        return [
+            (v, self.actions(v))
+            for v in jsons
+            if v >= start_version and (end_version is None or v <= end_version)
+        ]
+
+    def plan_changes(
+        self,
+        start_version: int = 0,
+        end_version: int | None = None,
+        change_feed: bool = False,
+    ) -> ChangePlan:
+        """The change planner: one `FileChange` per changed file of the
+        commits in [start_version, end_version], from one pure-Python
+        pass over their log actions — no Spark job, no snapshot replay,
+        nothing parsed past ``end_version``. ``cdc()``,
+        ``table_changes()`` and the ``pulsar_delta_cdc`` source all read
+        changes through it, so these rules are stated here only:
+
+        - op: an ``add`` is 'c', a ``remove`` is 'r' (reference
+          `DeltaReader.java:196-247`). ``dataChange=false`` adds/removes
+          are OPTIMIZE/compaction rewrites and are skipped.
+        - change feed: with ``change_feed``, a commit carrying ``cdc``
+          actions contributes only its ``_change_data`` files (op
+          'cdf'; their own ``_change_type`` column is exact, MERGE
+          pre/post images included). Other commits derive 'c'/'r'.
+        - event time (``ts_ms``): the file's own timestamp —
+          ``modificationTime`` of an add, ``deletionTimestamp`` of a
+          remove (reference `DeltaRecord.java:82`). A 'cdf' file takes
+          its commit's timestamp: the commit's ``inCommitTimestamp``
+          when present, else its commitInfo ``timestamp``, else the
+          commit file's mtime (``commit_ts``).
+        - partition value: the file's logged ``partitionValues``;
+          readers encode them as the key-sorted ``k=v`` concatenation
+          with no separator, a null value as ``null``
+          (`DeltaRecord.java:90-91`).
+        - schema epoch: a metaData action that changes the partition
+          columns, schema or configuration starts a new epoch, and every
+          file of its commit belongs to it."""
+        plan = ChangePlan()
+        for version, actions in self.changes(start_version, end_version):
+            commit_ts = next(
+                (
+                    ms
+                    for a in actions
+                    if (ms := _commit_info_ms(a.get("commitInfo"))) is not None
+                ),
+                None,
+            )
+            if commit_ts is None:  # no commitInfo: the file's mtime
+                commit_ts = self.commit_timestamp_ms(version)
+            plan.commit_ts[version] = commit_ts
+            for a in actions:
+                md = a.get("metaData")
+                if md is None:
+                    continue
+                meta = (
+                    tuple(md.get("partitionColumns") or ()),
+                    md.get("schemaString"),
+                    dict(md.get("configuration") or {}),
+                )
+                if meta != plan.epochs[-1]:
+                    plan.epochs.append(meta)
+            epoch = len(plan.epochs) - 1
+            feed = change_feed and any("cdc" in a for a in actions)
+            for a in actions:
+                if feed:
+                    f, op, ts = a.get("cdc"), OP_CHANGE_FILE, commit_ts
+                elif "add" in a:
+                    f, op, ts = a["add"], OP_INSERT, a["add"].get("modificationTime")
+                elif "remove" in a:
+                    f, op, ts = a["remove"], OP_DELETE, a["remove"].get("deletionTimestamp")
+                else:
+                    continue
+                # cdc files always log dataChange=false
+                if f is None or (op != OP_CHANGE_FILE and not f.get("dataChange", True)):
+                    continue
+                dv = f.get("deletionVector")
+                plan.changes.append(
+                    FileChange(
+                        version=version,
+                        op=op,
+                        path=f["path"],
+                        ts_ms=int(ts or 0),
+                        partition_values=dict(f.get("partitionValues") or {}),
+                        size=int(f.get("size") or 0),
+                        dv=dv if dv and int(dv.get("cardinality") or 0) > 0 else None,
+                        stats=f.get("stats"),
+                        epoch=epoch,
+                    )
+                )
+        return plan
+
+    def _scan_changes(self, spark: SparkSession, plan: ChangePlan) -> DataFrame:
+        """Rows of the planned files with their change envelope: ``op``,
+        ``partition_value`` (null on 'cdf' rows), ``_change_type``
+        (derived rows: insert/delete), ``_commit_version``, ``_ts_ms``
+        (event time) and ``_commit_ts_ms`` (commit time).
+
+        Files are grouped into ONE scan per (op, schema epoch) — a
+        10^5-commit range plans a handful of scans, not 10^5 union
+        branches. Each scan is pinned to its epoch's schemaString (as
+        ``read()`` pins the log schema): an evolved schema must NOT share
+        a schema-less scan with old files, or Spark would infer the
+        schema from one file and silently drop (or null-fill) the evolved
+        column. Per-file version and times are attached by a broadcast
+        join against a (file, op, epoch) lookup keyed on the scan's
+        ``_metadata.file_path``; epoch is in the key because a file
+        re-added after a schema change lives in two epoch buckets, and
+        each scan must join only its own commits."""
+        from pulsar_io_delta_spark.operators.cdc import partition_value_expr
+
+        groups: dict[tuple[str, int], dict[str, None]] = {}
+        # absolute-path adds (shallow clone commits) carry their
+        # partition values in the log, not in hive dirs
+        pv_abs: dict[str, dict] = {}
+        # (file, descriptor digest): an action carrying a DV emits only
+        # the file's LIVE rows, filtered per commit by its own DV variant
+        dv_keys: set[tuple[str, str]] = set()
+        lookup_rows: list[tuple] = []
+        for c in plan.changes:
+            abs_path = os.path.abspath(os.path.join(self.path, c.path))
+            if os.path.isabs(c.path):
+                pv_abs[c.path] = c.partition_values
+            dv_key = json.dumps(c.dv, sort_keys=True) if c.dv else ""
+            if dv_key:
+                dv_keys.add((abs_path, dv_key))
+            lookup_rows.append(
+                (abs_path, c.op, c.epoch, dv_key, c.version, c.ts_ms, plan.commit_ts[c.version])
+            )
+            # a re-added file is scanned once; the lookup fans it out per commit
+            groups.setdefault((c.op, c.epoch), {})[c.path] = None
+        epochs = list(plan.epochs)
+        if any(e == 0 for _op, e in groups):
+            base = self.snapshot(plan.changes[0].version)
+            epochs[0] = (tuple(base.partition_columns), base.schema_string, base.configuration)
+        lookup = spark.createDataFrame(
+            lookup_rows,
+            "_fp string, op string, _epoch int, _dv string, _commit_version long, "
+            "_ts_ms long, _commit_ts_ms long",
+        )
+        frames: list[DataFrame] = []
+        for (op, epoch), paths in groups.items():
+            pcols, schema, config = epochs[epoch]
+            mapping = _column_mapping(schema, config)
+            read_schema = mapping[0] if mapping else schema
+            keep = ["_fp"] + (["_ridx"] if dv_keys else [])
+            if op == OP_CHANGE_FILE:
+                s = json.loads(read_schema)
+                s["fields"].append(
+                    {"name": "_change_type", "type": "string", "nullable": True, "metadata": {}}
+                )
+                keep.append("_change_type")
+                # cdc files live under _change_data/<pcol>=v/...; the
+                # basePath must be the dir whose children are the hive
+                # partition dirs or Spark's partition discovery chokes
+                df = self._read_files(
+                    spark,
+                    list(paths),
+                    schema_string=json.dumps(s),
+                    base_path=os.path.join(self.path, "_change_data"),
+                )
+            else:
+                has_ext = any(os.path.isabs(p) for p in paths)
+                df = self._read_files(
+                    spark,
+                    list(paths),
+                    schema_string=read_schema,
+                    pv_by_abs=pv_abs if has_ext else None,
+                    partition_cols=self._physical_pcols(mapping, list(pcols))
+                    if has_ext
+                    else None,
+                )
+            # _metadata.file_path is a percent-encoded Hadoop URI
+            # (file:/abs/path); decode to the posix lookup key
+            df = df.withColumn("_fp", _posix_path_col(F.col("_metadata.file_path")))
+            if dv_keys:
+                df = df.withColumn("_ridx", F.col("_metadata.row_index"))
+            if mapping:
+                # metaData.partitionColumns stay LOGICAL under mapping
+                # (only partitionValues keys / dir names are physical),
+                # so after the rename pcols applies unchanged
+                df = df.select(
+                    _mapping_select_exprs(schema, mapping) + [F.col(k) for k in keep]
+                )
+            df = df.drop("_metadata").withColumn("op", F.lit(op)).withColumn("_epoch", F.lit(epoch))
+            if op != OP_CHANGE_FILE:
+                pv = partition_value_expr({p: F.col(p) for p in pcols}) if pcols else F.lit("")
+                df = df.withColumn("partition_value", pv).withColumn(
+                    "_change_type", F.lit("insert" if op == OP_INSERT else "delete")
+                )
+            frames.append(df)
+        out = frames[0]
+        for f in frames[1:]:
+            # schema may evolve between epochs: align by name,
+            # null-filling columns absent on either side
+            out = out.unionByName(f, allowMissingColumns=True)
+        out = out.join(F.broadcast(lookup), ["_fp", "op", "_epoch"])
+        if dv_keys:
+            # anti-join the commit-fanned rows against the per-variant
+            # deleted indexes; the digest IS the sorted descriptor JSON,
+            # so _expand_dv_df resolves straight from the key and the
+            # bitmap expansion runs executor-side
+            deleted = self._expand_dv_df(spark, sorted(dv_keys), with_key=True)
+            out = out.join(deleted, ["_fp", "_dv", "_ridx"], "left_anti").drop("_ridx")
+        return out.drop("_fp", "_epoch", "_dv")
 
     def cdc(
         self,
         spark: SparkSession,
         start_version: int = 0,
-        versions: set[int] | None = None,
+        end_version: int | None = None,
     ) -> DataFrame:
-        """Change-data rows from the log tail: op 'c' for rows of added
-        files, 'r' for rows of removed (pre-vacuum) files, with
-        partition_value string, event time, and commit version.
-
-        Single log pass: schema + partition columns are tracked
-        incrementally from metaData actions (no per-commit snapshot
-        replay), and files are grouped into ONE scan per
-        (op, schema epoch) — a 10^5-commit backfill plans a handful of
-        scans, not 10^5 union branches. Each scan is pinned to its
-        epoch's schemaString (mirroring ``read()``'s log-schema pin): a
-        metaData action that evolves the schema but keeps the partition
-        columns must NOT share a schema-less scan with old files, or
-        Spark would infer the schema from one file and silently drop
-        (or null-fill) the evolved column. Per-file commit version and
-        event time are attached by a broadcast join against a
-        (file → version, ts) lookup keyed on the scan's
-        ``_metadata.file_path``."""
-        from pulsar_io_delta_spark.operators.cdc import partition_value_expr
-
-        # Epoch base: schema + partition columns in effect entering
-        # start_version (commit changes[0][0]'s own metaData included —
-        # re-seeing it below is a no-op change).
-        changes = self.changes(start_version)
-        base = self.snapshot(changes[0][0]) if changes else None
-        pcols: tuple[str, ...] = tuple(base.partition_columns) if base else ()
-        schema_str: str | None = base.schema_string if base else None
-        config: dict = dict(base.configuration) if base else {}
-        epoch = 0
-        epoch_meta: dict[int, tuple[tuple[str, ...], str | None, dict]] = {
-            0: (pcols, schema_str, config)
-        }
-        groups: dict[tuple[str, int], list[str]] = {}
-        # absolute-path adds (shallow clone commits) carry their
-        # partition values in the log, not in hive dirs — collect them
-        # for _read_files' external branch (stable per path)
-        pv_abs: dict[str, dict] = {}
-        # DV identity per (file, commit, op): an add/remove action that
-        # carries a deletionVector emits only the file's LIVE rows; the
-        # descriptor digest keys the per-variant row filter so a file
-        # whose DV evolves across commits is filtered per commit, not
-        # with one merged mask.
-        dv_registry: dict[tuple[str, str], dict] = {}
-        # path, op, epoch, version, ts_ms — epoch is part of the join key:
-        # a file re-added after a schema/pcols change lives in TWO epoch
-        # buckets (scanned once per epoch, each pinned to its schema), and
-        # without epoch in the key each scan would join ALL of the file's
-        # commits, duplicating every CDC row
-        lookup_rows: list[tuple[str, str, int, str, int, int]] = []
-        for version, actions in changes:
-            for action in actions:
-                if "metaData" in action:
-                    new_pcols = action["metaData"].get("partitionColumns")
-                    new_schema = action["metaData"].get("schemaString")
-                    new_config = action["metaData"].get("configuration")
-                    changed = False
-                    if new_pcols is not None and tuple(new_pcols) != pcols:
-                        pcols = tuple(new_pcols)
-                        changed = True
-                    if new_schema is not None and new_schema != schema_str:
-                        schema_str = new_schema
-                        changed = True
-                    if new_config is not None and dict(new_config) != config:
-                        config = dict(new_config)
-                        changed = True
-                    if changed:
-                        epoch += 1
-                        epoch_meta[epoch] = (pcols, schema_str, config)
-            if versions is not None and version not in versions:
-                continue  # epoch tracking above still sees every commit
-            # dataChange=false actions are file reorganization (OPTIMIZE)
-            # — invisible to change consumers
-            adds = [a["add"] for a in actions if "add" in a and a["add"].get("dataChange", True)]
-            removes = [
-                a["remove"]
-                for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            ]
-            for op, group, ts_key in (
-                (OP_INSERT, adds, "modificationTime"),
-                (OP_DELETE, removes, "deletionTimestamp"),
-            ):
-                if not group:
-                    continue
-                # event time is per (commit, op): max file timestamp,
-                # matching the reference's commit-granular capture
-                ts_ms = max((int(g.get(ts_key) or 0) for g in group), default=0)
-                bucket = groups.setdefault((op, epoch), [])
-                for g in group:
-                    abs_path = os.path.abspath(os.path.join(self.path, g["path"]))
-                    if os.path.isabs(g["path"]):
-                        pv_abs[g["path"]] = g.get("partitionValues") or {}
-                    dv = g.get("deletionVector")
-                    dv_key = ""
-                    if dv and int(dv.get("cardinality") or 0) > 0:
-                        dv_key = json.dumps(dv, sort_keys=True)
-                        dv_registry[(abs_path, dv_key)] = dv
-                    lookup_rows.append((abs_path, op, epoch, dv_key, version, ts_ms))
-                    if g["path"] not in bucket:  # re-added file: scan once,
-                        bucket.append(g["path"])  # lookup fans out per commit
-        if not groups:
+        """Change-data rows of the commits in [start_version,
+        end_version]: op 'c' for rows of added files, 'r' for rows of
+        removed (pre-vacuum) files, with partition_value string, event
+        time ``ts`` and ``_commit_version`` (rules: ``plan_changes``).
+        Rows of a file carrying a deletion vector are its live rows."""
+        plan = self.plan_changes(start_version, end_version)
+        if not plan.changes:
             raise DeltaProtocolError(f"no data-changing commits ≥ {start_version}")
-        lookup = spark.createDataFrame(
-            lookup_rows,
-            "_fp string, op string, _epoch int, _dv string, _commit_version long, _ts_ms long",
-        )
-        frames: list[DataFrame] = []
-        for (op, epoch_id), rel_paths in groups.items():
-            epoch_pcols, epoch_schema, epoch_config = epoch_meta[epoch_id]
-            mapping = _column_mapping(epoch_schema, epoch_config)
-            has_ext = any(os.path.isabs(p) for p in rel_paths)
-            df = self._read_files(
-                spark,
-                rel_paths,
-                schema_string=mapping[0] if mapping else epoch_schema,
-                pv_by_abs=pv_abs if has_ext else None,
-                partition_cols=self._physical_pcols(mapping, list(epoch_pcols))
-                if has_ext
-                else None,
-            )
-            # _metadata.file_path is a percent-encoded Hadoop URI
-            # (file:/abs/path); decode to the posix lookup key
-            df = df.withColumn("_fp", _posix_path_col(F.col("_metadata.file_path")))
-            if dv_registry:
-                df = df.withColumn("_ridx", F.col("_metadata.row_index"))
-            if mapping:
-                # metaData.partitionColumns stay LOGICAL under mapping
-                # (only partitionValues keys / dir names are physical),
-                # so after the rename epoch_pcols applies unchanged
-                keep = ["_fp"] + (["_ridx"] if dv_registry else [])
-                df = df.select(
-                    _mapping_select_exprs(epoch_schema, mapping)
-                    + [F.col(k) for k in keep]
-                )
-            pv = (
-                partition_value_expr({c: F.col(c) for c in epoch_pcols})
-                if epoch_pcols
-                else F.lit("")
-            )
-            frames.append(
-                df.drop("_metadata")
-                .withColumn("op", F.lit(op))
-                .withColumn("_epoch", F.lit(epoch_id))
-                .withColumn("partition_value", pv)
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            # schema may evolve between epochs (op='m' boundary): align
-            # by name, null-filling columns absent on either side
-            out = out.unionByName(f, allowMissingColumns=True)
-        out = out.join(F.broadcast(lookup), ["_fp", "op", "_epoch"])
-        if dv_registry:
-            # an action carrying a DV contributes only its LIVE rows:
-            # anti-join the commit-fanned rows against the per-variant
-            # deleted indexes (keyed by file + descriptor digest so two
-            # commits with different DVs of one file filter differently).
-            # The digest IS the sorted descriptor JSON, so _expand_dv_df
-            # resolves straight from the key — and the bitmap expansion
-            # runs executor-side exactly like the batch read path
-            # (VERDICT r7 #3: the old driver-side list comprehension
-            # materialized every deleted row index on the driver).
-            entries = sorted((fp, key) for fp, key in dv_registry)
-            deleted = self._expand_dv_df(spark, entries, with_key=True)
-            out = out.join(deleted, ["_fp", "_dv", "_ridx"], "left_anti").drop("_ridx")
         return (
-            out.withColumn("ts", F.timestamp_millis(F.col("_ts_ms")))
-            .drop("_fp", "_ts_ms", "_epoch", "_dv")
+            self._scan_changes(spark, plan)
+            .withColumn("ts", F.timestamp_millis(F.col("_ts_ms")))
+            .drop("_ts_ms", "_commit_ts_ms", "_change_type")
         )
 
     def table_changes(
@@ -3386,158 +3496,20 @@ class DeltaTable:
         including MERGE update_preimage/update_postimage pairs that no
         add/remove derivation can reconstruct. Data-changing commits
         without cdc actions derive insert/delete rows from their
-        add/remove actions (the spec's reader-side derivation), reusing
-        cdc()'s one-scan-per-epoch machinery.
-
-        Scale shape: cdc files are grouped into one scan per schema
-        epoch (pinned schema; commit version and timestamp attached by a
-        broadcast lookup join on file path) — a 10^5-commit feed plans a
-        handful of scans, and no change row ever touches the driver."""
-        changes = self.changes(start_version)
-        if end_version is not None:
-            changes = [(v, a) for v, a in changes if v <= end_version]
-        cdc_versions = {
-            v for v, actions in changes if any("cdc" in a for a in actions)
-        }
-        derived_versions = {
-            v
-            for v, actions in changes
-            if v not in cdc_versions
-            and any(
-                k in a and a[k].get("dataChange", True)
-                for a in actions
-                for k in ("add", "remove")
-            )
-        }
-        frames: list[DataFrame] = []
-        if derived_versions:
-            derived = self.cdc(spark, start_version, versions=derived_versions)
-            # _commit_timestamp is the COMMIT clock (ICT-aware via
-            # commit_timestamp_ms), not cdc()'s reference-parity event
-            # time (add.modificationTime) — broadcast version lookup,
-            # same shape as the cdc-file path's (file → ts) lookup
-            vts = spark.createDataFrame(
-                [(v, self.commit_timestamp_ms(v)) for v in derived_versions],
-                "_commit_version long, _vts_ms long",
-            )
-            frames.append(
-                derived.withColumn(
-                    "_change_type",
-                    F.when(F.col("op") == OP_INSERT, F.lit("insert")).otherwise(
-                        F.lit("delete")
-                    ),
-                )
-                .drop("op", "partition_value", "ts")
-                .join(F.broadcast(vts), ["_commit_version"])
-                .withColumn("_commit_timestamp", F.timestamp_millis(F.col("_vts_ms")))
-                .drop("_vts_ms")
-            )
-        if cdc_versions:
-            frames.append(self._scan_change_files(spark, changes, cdc_versions))
-        if not frames:
+        add/remove actions (the spec's reader-side derivation).
+        ``_commit_timestamp`` is the commit clock (ICT-aware), not the
+        per-file event time. No change row ever touches the driver."""
+        plan = self.plan_changes(start_version, end_version, change_feed=True)
+        if not plan.changes:
             raise DeltaProtocolError(f"no data-changing commits ≥ {start_version}")
-        out = frames[0]
-        for f in frames[1:]:
-            # schema may evolve between epochs: align by name
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
-
-    def _scan_change_files(
-        self,
-        spark: SparkSession,
-        changes: list[tuple[int, list[dict]]],
-        cdc_versions: set[int],
-    ) -> DataFrame:
-        """One scan per schema epoch over the ``_change_data`` files of
-        the commits in ``cdc_versions`` (epoch tracking mirrors cdc():
-        a metaData action that evolves schema/pcols/config starts a new
-        pinned-schema scan group)."""
-        base = self.snapshot(changes[0][0])
-        pcols: tuple[str, ...] = tuple(base.partition_columns)
-        schema_str: str | None = base.schema_string
-        config: dict = dict(base.configuration)
-        epoch = 0
-        epoch_meta: dict[int, tuple[tuple[str, ...], str | None, dict]] = {
-            0: (pcols, schema_str, config)
-        }
-        groups: dict[int, list[str]] = {}
-        lookup_rows: list[tuple[str, int, int, int]] = []
-        for version, actions in changes:
-            for action in actions:
-                if "metaData" in action:
-                    md = action["metaData"]
-                    new_pcols = md.get("partitionColumns")
-                    new_schema = md.get("schemaString")
-                    new_config = md.get("configuration")
-                    changed = False
-                    if new_pcols is not None and tuple(new_pcols) != pcols:
-                        pcols = tuple(new_pcols)
-                        changed = True
-                    if new_schema is not None and new_schema != schema_str:
-                        schema_str = new_schema
-                        changed = True
-                    if new_config is not None and dict(new_config) != config:
-                        config = dict(new_config)
-                        changed = True
-                    if changed:
-                        epoch += 1
-                        epoch_meta[epoch] = (pcols, schema_str, config)
-            if version not in cdc_versions:
-                continue
-            ts_ms = next(
-                (
-                    # ICT is authoritative over the wall timestamp, same
-                    # rule as commit_timestamp_ms (the derived-commit CDF
-                    # path already goes through it)
-                    int(ci["inCommitTimestamp"] if "inCommitTimestamp" in ci
-                        else ci["timestamp"])
-                    for a in actions
-                    if (ci := a.get("commitInfo") or {}).get("timestamp") is not None
-                ),
-                0,
-            )
-            for a in actions:
-                c = a.get("cdc")
-                if not c:
-                    continue
-                abs_path = os.path.abspath(os.path.join(self.path, c["path"]))
-                lookup_rows.append((abs_path, epoch, version, ts_ms))
-                groups.setdefault(epoch, []).append(c["path"])
-        lookup = spark.createDataFrame(
-            lookup_rows, "_fp string, _epoch int, _commit_version long, _ts_ms long"
+        out = self._scan_changes(spark, plan)
+        envelope = ("op", "partition_value", "_change_type", "_commit_version", "_ts_ms", "_commit_ts_ms")
+        return out.select(
+            *[c for c in out.columns if c not in envelope],
+            "_change_type",
+            "_commit_version",
+            F.timestamp_millis(F.col("_commit_ts_ms")).alias("_commit_timestamp"),
         )
-        frames: list[DataFrame] = []
-        for epoch_id, rel_paths in groups.items():
-            _epoch_pcols, epoch_schema, epoch_config = epoch_meta[epoch_id]
-            mapping = _column_mapping(epoch_schema, epoch_config)
-            s = json.loads(mapping[0] if mapping else epoch_schema)
-            s["fields"].append(
-                {"name": "_change_type", "type": "string", "nullable": True,
-                 "metadata": {}}
-            )
-            df = self._read_files(
-                spark,
-                rel_paths,
-                schema_string=json.dumps(s),
-                # cdc files live under _change_data/<pcol>=v/...; the
-                # basePath must be the dir whose children are the hive
-                # partition dirs or Spark's partition discovery chokes
-                base_path=os.path.join(self.path, "_change_data"),
-            )
-            df = df.withColumn("_fp", _posix_path_col(F.col("_metadata.file_path")))
-            if mapping:
-                df = df.select(
-                    _mapping_select_exprs(epoch_schema, mapping)
-                    + [F.col("_change_type"), F.col("_fp")]
-                )
-            frames.append(df.withColumn("_epoch", F.lit(epoch_id)))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        out = out.join(F.broadcast(lookup), ["_fp", "_epoch"])
-        return out.withColumn(
-            "_commit_timestamp", F.timestamp_millis(F.col("_ts_ms"))
-        ).drop("_fp", "_epoch", "_ts_ms")
 
     def schema_changes(self, start_version: int = 0) -> list[tuple[int, str]]:
         """(version, schemaString) for each metaData action — the op='m'
@@ -5473,6 +5445,7 @@ class DeltaTable:
         while True:
             actions: list[dict] = []
             read_version: int | None = None
+            configuration: dict = {}
             first = not (self.exists() and self.versions())
             if txn is not None:
                 app_id, txn_version = txn
@@ -5502,6 +5475,7 @@ class DeltaTable:
                 )
             else:
                 prior = self.snapshot()
+                configuration = prior.configuration
                 merged = self._merge_schema_strings(prior.schema_string, schema_json)
                 # partition_by=None means "keep the table's partitioning"
                 # — only an explicit list participates in change detection
@@ -5513,18 +5487,20 @@ class DeltaTable:
                     actions.append(
                         {
                             "metaData": {
-                                "id": str(uuid.uuid4()),
+                                "id": prior.table_id or str(uuid.uuid4()),
                                 "format": {"provider": "parquet", "options": {}},
                                 "schemaString": merged if merged is not None else (prior.schema_string or schema_json),
                                 "partitionColumns": new_pcols,
-                                "configuration": {},
+                                "configuration": dict(configuration),
                             }
                         }
                     )
                     read_version = prior.version  # don't clobber a racing schema change
             actions.extend({"add": a} for a in adds)
             try:
-                return self._commit(actions, operation, read_version=read_version)
+                return self._commit(
+                    actions, operation, read_version=read_version, configuration=configuration
+                )
             except DeltaConcurrentCommit:
                 if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
                     return -1  # a racer delivered this exact batch
