@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_io_delta_spark.operators.cdc import OP_INSERT, partition_value_expr
-from pulsar_io_delta_spark.sources.delta_log import DeltaTable
+from pulsar_io_delta_spark.sources.delta_log import DeltaNoDataChange, DeltaTable
 
 LATEST = -1
 
@@ -201,16 +201,21 @@ class DeltaCdcConnector:
     def poll(self, spark: SparkSession, cursor: Checkpoint) -> tuple[DataFrame | None, Checkpoint]:
         """One micro-batch of the incremental loop: records committed
         after ``cursor``, plus the advanced cursor. Returns (None,
-        cursor) when the table has no new commits — the reference's
-        reader thread's steady-state poll (`DeltaReaderThread.java:48-73`),
-        minus its fail-stop bug (no data ≠ failure).
+        cursor) when the table has no new commits, and (None, cursor
+        advanced to the latest version) when the new commits change no
+        data (OPTIMIZE, PURGE) — the reference's reader thread's
+        steady-state poll (`DeltaReaderThread.java:48-73`), minus its
+        fail-stop bug (no data ≠ failure).
         """
         latest = self.table.latest_version()
         frm = cursor.snapshot_version + (0 if cursor.state == FULL_COPY else 1)
         if latest < frm:
             return None, cursor
-        df = self.tail(spark, frm, latest)
-        return df, Checkpoint(state=INCREMENTAL_COPY, snapshot_version=latest)
+        advanced = Checkpoint(state=INCREMENTAL_COPY, snapshot_version=latest)
+        try:
+            return self.tail(spark, frm, latest), advanced
+        except DeltaNoDataChange:
+            return None, advanced
 
     def run(self, spark: SparkSession, sink, max_polls: int = 1) -> Checkpoint:
         """Driver loop: bootstrap (if FULL_COPY) then poll-and-deliver

@@ -504,9 +504,11 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    # a null partition value is a JSON null in the log and Hive's
+    # default-partition directory on disk
     groups: dict[tuple, list] = {}
     for row in iterator:
-        key = tuple(str(row[c]) for c in partition_by)
+        key = tuple(None if row[c] is None else str(row[c]) for c in partition_by)
         groups.setdefault(key, []).append(row)
     adds = []
     data_cols = [f for f in schema.fields if f.name not in partition_by]
@@ -515,7 +517,10 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
             f.name: pa.array([r[f.name] for r in rows], _to_arrow(f.dataType.simpleString()))
             for f in data_cols
         }
-        rel_dir = "/".join(f"{c}={v}" for c, v in zip(partition_by, key))
+        rel_dir = "/".join(
+            f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
+            for c, v in zip(partition_by, key)
+        )
         rel_path = (rel_dir + "/" if rel_dir else "") + f"part-{_uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(table_path, rel_path)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)

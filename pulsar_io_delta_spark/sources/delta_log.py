@@ -51,7 +51,7 @@ import random
 import re
 import time
 import uuid
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -64,6 +64,12 @@ from pulsar_io_delta_spark.sources.fs import FileSystem, LocalFileSystem
 
 class DeltaProtocolError(Exception):
     """Raised on protocol features outside this reader's scope."""
+
+
+class DeltaNoDataChange(DeltaProtocolError):
+    """A change read over commits that change no data (only OPTIMIZE or
+    PURGE rewrites): nothing to emit. The connector's poll treats it as
+    an empty batch."""
 
 
 def _operation_metrics(actions: list[dict]) -> dict[str, str]:
@@ -2365,15 +2371,7 @@ class DeltaTable:
         actions: list[dict] = [
             {"checkpointMetadata": {"version": v}},
             {"protocol": dict(snap.protocol)},
-            {
-                "metaData": {
-                    "id": snap.table_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema_string,
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": dict(snap.configuration or {}),
-                }
-            },
+            self._metadata_update(snap, snap.schema_string),
         ]
         file_actions: list[dict] = []
         for path in snap.files:
@@ -3077,20 +3075,7 @@ class DeltaTable:
             "delta.rowTracking.materializedRowCommitVersionColumnName":
                 f"_rcv_mat_{uuid.uuid4().hex[:8]}",
         }
-        actions: list[dict] = [
-            {"protocol": _upgraded_protocol(
-                snap.protocol, (), ("rowTracking", "domainMetadata")
-            )},
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "schemaString": snap.schema_string,
-                    "partitionColumns": list(snap.partition_columns),
-                    "format": {"provider": "parquet", "options": {}},
-                    "configuration": config,
-                }
-            },
-        ]
+        adds: list[dict] = []
         for p in sorted(snap.files):
             add = dict(snap.adds[p])
             add.pop("baseRowId", None)
@@ -3106,29 +3091,21 @@ class DeltaTable:
                         _stats_index_cols(snap.schema_string, config),
                     )
                 )
-            add["dataChange"] = False
-            actions.append({"add": add})
-        return self._commit(
-            actions, operation="UPGRADE ROW TRACKING",
-            read_version=snap.version, configuration=config,
+            adds.append(add)
+        return self._rewrite_commit(
+            snap, "UPGRADE ROW TRACKING", adds=adds, data_change=False,
+            actions=[self._metadata_update(snap, snap.schema_string, config)],
+            writer_features=("rowTracking", "domainMetadata"),
         )
 
     def _rewrite_source(
         self, spark: SparkSession, snap: Snapshot, rel_paths: list[str]
     ) -> DataFrame:
-        """Rows of ``rel_paths`` with live visibility, shaped for a
-        REWRITE: on a row-tracked table the materialized row-id /
-        commit-version columns ride along into the staged files, so
-        OPTIMIZE / PURGE / DELETE survivors keep their row identity
-        (the spec's materialized-column mechanism). Plain tables get
-        the ordinary live scan."""
+        """Live rows of ``rel_paths`` to rewrite: on a row-tracked table
+        with each row's ``row_id`` / ``row_commit_version``, which
+        :meth:`_rewrite_commit` stages as the materialized columns."""
         if _rt_enabled(snap.configuration):
-            mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
-            return (
-                self._scan_live_rt(spark, snap, rel_paths)
-                .withColumnRenamed("row_id", mat_id)
-                .withColumnRenamed("row_commit_version", mat_rcv)
-            )
+            return self._scan_live_rt(spark, snap, rel_paths)
         return self._scan_live(spark, snap, rel_paths)
 
     def _expand_dv_df(
@@ -3474,7 +3451,7 @@ class DeltaTable:
         Rows of a file carrying a deletion vector are its live rows."""
         plan = self.plan_changes(start_version, end_version)
         if not plan.changes:
-            raise DeltaProtocolError(f"no data-changing commits ≥ {start_version}")
+            raise DeltaNoDataChange(f"no data-changing commits ≥ {start_version}")
         return (
             self._scan_changes(spark, plan)
             .withColumn("ts", F.timestamp_millis(F.col("_ts_ms")))
@@ -3501,7 +3478,7 @@ class DeltaTable:
         per-file event time. No change row ever touches the driver."""
         plan = self.plan_changes(start_version, end_version, change_feed=True)
         if not plan.changes:
-            raise DeltaProtocolError(f"no data-changing commits ≥ {start_version}")
+            raise DeltaNoDataChange(f"no data-changing commits ≥ {start_version}")
         out = self._scan_changes(spark, plan)
         envelope = ("op", "partition_value", "_change_type", "_commit_version", "_ts_ms", "_commit_ts_ms")
         return out.select(
@@ -3557,7 +3534,16 @@ class DeltaTable:
         mtimes (Delta PROTOCOL.md "In-Commit Timestamps": the defense
         against clock-skewed object stores reordering history). The
         timestamp is re-derived on every retry so a racer's commit
-        cannot break monotonicity."""
+        cannot break monotonicity.
+
+        A commit carries at most one ``protocol`` and one ``metaData``
+        action (Delta PROTOCOL.md); replay keeps the last of each, so a
+        second one would silently overwrite the first."""
+        for kind in ("protocol", "metaData"):
+            if sum(kind in a for a in actions) > 1:
+                raise DeltaProtocolError(
+                    f"{operation} commit carries more than one {kind} action"
+                )
         ict_armed = (configuration or {}).get(
             "delta.enableInCommitTimestamps"
         ) == "true" or any(
@@ -3809,8 +3795,7 @@ class DeltaTable:
         actions: list[dict],
         idents: dict[str, dict],
         schema_string: str | None,
-        configuration: dict | None,
-        partition_columns: list[str],
+        snap: Snapshot,
     ) -> None:
         """Advance each identity column's delta.identity.highWaterMark
         past the extreme value this commit's staged files contain — read
@@ -3855,17 +3840,7 @@ class DeltaTable:
             if "metaData" in a:
                 a["metaData"]["schemaString"] = json.dumps(s)
                 return
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps(s),
-                    "partitionColumns": partition_columns,
-                    "configuration": dict(configuration or {}),
-                }
-            }
-        )
+        actions.append(self._metadata_update(snap, json.dumps(s)))
 
     def _apply_generated(self, df: DataFrame, schema_string: str | None) -> DataFrame:
         """Generated-column write semantics: columns MISSING from the
@@ -3885,18 +3860,6 @@ class DeltaTable:
                         f"generation expression ({expr}) on incoming rows"
                     )
         return df
-
-    @staticmethod
-    def _cdf_protocol_actions(snap: Snapshot) -> list[dict]:
-        """Protocol action list for a cdc-writing commit: upgrade to the
-        table-features form with changeDataFeed on first use (feature-
-        merging, never dropping — same rule as the DV upgrade); empty
-        when the protocol already advertises it."""
-        if "changeDataFeed" in (snap.protocol.get("writerFeatures") or ()):
-            return []
-        return [
-            {"protocol": _upgraded_protocol(snap.protocol, (), ("changeDataFeed",))}
-        ]
 
     @staticmethod
     def _to_physical(df: DataFrame, mapping) -> DataFrame:
@@ -3952,8 +3915,10 @@ class DeltaTable:
     def _stage_and_move(
         self, df: DataFrame, partition_by: list[str], mapping=None, cdc: bool = False,
         stats_cols: "frozenset | None | object" = _STATS_COLS_UNSET,
+        data_change: bool = True,
     ) -> list[dict]:
-        """Write df as parquet into the table dir; return add actions.
+        """Write df as parquet into the table dir; return add actions
+        with ``dataChange=data_change``.
         ``mapping`` (from _column_mapping) stages under PHYSICAL column
         names — data files and hive partition dirs of a mapped table
         must never contain logical names. ``cdc=True`` stages CHANGE
@@ -4010,7 +3975,7 @@ class DeltaTable:
                     "partitionValues": pvals,
                     "size": self.fs.size(dst),
                     "modificationTime": self.fs.mtime_ms(dst),
-                    "dataChange": True,
+                    "dataChange": data_change,
                 }
                 try:
                     add["stats"] = json.dumps(self._stats_for(dst, stats_cols))
@@ -4024,18 +3989,114 @@ class DeltaTable:
         self.fs.rmtree(staging)
         return adds
 
-    def _metadata_action(
-        self, df: DataFrame, partition_by: list[str], configuration: dict | None = None
+    @staticmethod
+    def _metadata_update(
+        snap: "Snapshot | None",
+        schema_string: str | None,
+        configuration: dict | None = None,
+        partition_columns: list[str] | None = None,
     ) -> dict:
-        return {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": df.schema.json(),
-                "partitionColumns": partition_by,
-                "configuration": dict(configuration or {}),
-            }
-        }
+        """Every metaData action is made here. On an existing table
+        (``snap``) it keeps the table id, and the partition columns and
+        configuration unless they are replaced; readers key on the id,
+        so a metadata change must not look like a new table. Only a
+        creating commit (``snap=None``) mints an id."""
+        if partition_columns is None:
+            partition_columns = snap.partition_columns if snap else []
+        if configuration is None:
+            configuration = snap.configuration if snap else {}
+        return {"metaData": {
+            "id": (snap and snap.table_id) or str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema_string,
+            "partitionColumns": list(partition_columns),
+            "configuration": dict(configuration or {}),
+        }}
+
+    def _rewrite_commit(
+        self,
+        snap: Snapshot,
+        operation: str,
+        removed: Sequence[str] = (),
+        rewritten: DataFrame | None = None,
+        *,
+        adds: Sequence[dict] = (),
+        change_rows: Callable[[], DataFrame] | None = None,
+        data_change: bool = True,
+        actions: Sequence[dict] = (),
+        reader_features: tuple[str, ...] = (),
+        writer_features: tuple[str, ...] = (),
+    ) -> int:
+        """Build and publish one commit against ``snap``: the only
+        commit path of the DML verbs (merge, update, delete, DV delete),
+        the maintenance verbs (OPTIMIZE, clustering, PURGE) and the
+        metadata-only ALTERs. Change readers turn its removes into 'r'
+        and its adds into 'c' records, so these rules live here once:
+
+        - removes: each path in ``removed`` gets a remove stamped with
+          one ``deletionTimestamp``. A remove copies the file's
+          deletion-vector descriptor, so readers skip its already-deleted
+          rows and vacuum sees the dead bitmap (``_remove_action``).
+        - dataChange: every remove and add of the commit carries
+          ``data_change``. False marks a rewrite that keeps the table's
+          rows (OPTIMIZE, PURGE, row-tracking backfill); change readers
+          skip it.
+        - adds: ``rewritten`` is staged under the snapshot's partition
+          columns and column mapping; ``adds`` are add actions built by
+          the caller (deletion-vector re-adds, restored files).
+        - row ids: on a row-tracked table ``rewritten`` carries the
+          logical ``row_id`` / ``row_commit_version`` of each row
+          (``_rewrite_source``); they are staged as the table's
+          materialized columns, so a rewritten row keeps its id. A null
+          commit version means "changed by this commit".
+        - change data: with ``delta.enableChangeDataFeed`` on,
+          ``change_rows()`` (a thunk: nothing is planned otherwise) is
+          staged as ``cdc`` files under ``_change_data/``, with its
+          ``_change_type`` column.
+        - protocol: at most one protocol action, merged with the
+          snapshot's: ``deletionVectors`` when an add carries a DV,
+          ``changeDataFeed`` when a cdc file is staged, plus
+          ``reader_features`` / ``writer_features``. None when the
+          protocol already lists them all.
+        - commit: ``actions`` (e.g. a metaData) ride along; the commit
+          runs at ``snap.version`` under ``snap.configuration``, so a
+          lost race raises ``DeltaConcurrentCommit`` and the table's
+          in-commit timestamps and checkpoint interval apply."""
+        now_ms = int(time.time() * 1000)
+        out = list(actions)
+        out += [self._remove_action(snap, p, now_ms, data_change) for p in removed]
+        out += [{"add": {**a, "dataChange": data_change}} for a in adds]
+        mapping = self._mapping_of(snap)
+        if rewritten is not None:
+            if _rt_enabled(snap.configuration):
+                mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
+                rewritten = rewritten.withColumnRenamed(
+                    "row_id", mat_id
+                ).withColumnRenamed("row_commit_version", mat_rcv)
+            out += self._stage_and_move(
+                rewritten, snap.partition_columns, mapping=mapping,
+                data_change=data_change,
+            )
+        if change_rows is not None and _cdf_enabled(snap.configuration):
+            out += self._stage_and_move(
+                change_rows(), snap.partition_columns, mapping=mapping, cdc=True
+            )
+        rf, wf = set(reader_features), set(writer_features)
+        if any((a.get("add") or {}).get("deletionVector") for a in out):
+            rf.add("deletionVectors")
+            wf.add("deletionVectors")
+        if any("cdc" in a for a in out):
+            wf.add("changeDataFeed")
+        p = snap.protocol
+        if not (
+            rf <= set(p.get("readerFeatures") or ())
+            and wf <= set(p.get("writerFeatures") or ())
+        ):
+            out.insert(0, {"protocol": _upgraded_protocol(p, tuple(rf), tuple(wf))})
+        return self._commit(
+            out, operation=operation, read_version=snap.version,
+            configuration=snap.configuration,
+        )
 
     @staticmethod
     def _merge_schema_strings(old: str | None, new: str) -> str | None:
@@ -4171,7 +4232,7 @@ class DeltaTable:
                     {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
                 )
             actions.append(
-                self._metadata_action(df, partition_by, configuration)
+                self._metadata_update(None, df.schema.json(), configuration, partition_by)
             )
             if cluster_by:
                 actions.append({"domainMetadata": {
@@ -4228,7 +4289,9 @@ class DeltaTable:
                 self._validate_constraints(df, prior.configuration)
                 effective_schema = df.schema.json()
                 actions.append(
-                    self._metadata_action(df, partition_by, prior.configuration)
+                    self._metadata_update(
+                        prior, df.schema.json(), partition_columns=partition_by
+                    )
                 )
                 if _schema_has_variant(effective_schema) and "variantType" not in (
                     prior.protocol.get("readerFeatures") or ()
@@ -4294,11 +4357,7 @@ class DeltaTable:
                         merged, config = _assign_mapping_metadata(merged, config)
                         mapping = _column_mapping(merged, config)
                         commit_config = config
-                    md = self._metadata_action(
-                        df, partition_by or prior.partition_columns, config
-                    )
-                    md["metaData"]["schemaString"] = merged
-                    actions.append(md)
+                    actions.append(self._metadata_update(prior, merged, config))
                     if _schema_has_variant(merged) and "variantType" not in (
                         prior.protocol.get("readerFeatures") or ()
                     ):
@@ -4332,8 +4391,7 @@ class DeltaTable:
         )
         if idents:
             self._advance_identity_watermarks(
-                actions, idents, effective_schema, commit_config,
-                partition_by or self.snapshot().partition_columns,
+                actions, idents, effective_schema, prior
             )
         while True:
             try:
@@ -4464,96 +4522,54 @@ class DeltaTable:
                 aligned_source = aligned_source.withColumn(c, F.lit(None))
         aligned_source = aligned_source.select(*table_cols)
         rt = _rt_enabled(snap.configuration)
-        nul = F.lit(None).cast("long")
+        rt_cols = ["row_id", "row_commit_version"] if rt else []
+        rewritten = aligned_source
         if touched:
             # live visibility: survivors of a DV-carrying file are its
             # LIVE rows only (touch-detection above may over-touch on
             # deleted rows — harmless, just an extra rewrite;
             # resurrecting them here would be a wrong answer). On a
-            # row-tracked table survivors keep (row_id, commit version),
-            # UPDATED rows inherit the target row's row_id (one bounded
-            # equi-join on the merge keys) with a null commit version —
-            # "modified at this commit" — and inserts take fresh ids.
-            live = _fill_new(
-                self._scan_live_rt(spark, snap, touched)
-                if rt
-                else self._scan_live(spark, snap, touched)
-            )
+            # row-tracked table UPDATED rows inherit the target row's
+            # row_id (one bounded equi-join on the merge keys) and
+            # inserts take fresh ids.
+            live = _fill_new(self._rewrite_source(spark, snap, touched))
             if rt:
-                survivors = live.join(keys, key_cols, "left_anti").select(
-                    *table_cols, "row_id", "row_commit_version"
-                )
                 old_ids = live.join(keys, key_cols, "left_semi").select(
                     *key_cols, "row_id"
                 )
-                src = aligned_source.join(old_ids, key_cols, "left").withColumn(
-                    "row_commit_version", nul
+                rewritten = rewritten.join(old_ids, key_cols, "left").withColumn(
+                    "row_commit_version", F.lit(None).cast("long")
                 )
-                rewritten = survivors.unionByName(
-                    src.select(*table_cols, "row_id", "row_commit_version")
-                )
-            else:
-                survivors = live.join(keys, key_cols, "left_anti").select(*table_cols)
-                rewritten = survivors.unionByName(aligned_source)
-        elif rt:
-            rewritten = aligned_source.withColumn("row_id", nul).withColumn(
-                "row_commit_version", nul
+            rewritten = (
+                live.join(keys, key_cols, "left_anti")
+                .select(*table_cols, *rt_cols)
+                .unionByName(rewritten.select(*table_cols, *rt_cols))
             )
-        else:
-            rewritten = aligned_source
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [self._remove_action(snap, p, now_ms) for p in touched]
-        if evolved:
-            # the widened schema rides the SAME commit (op='m' boundary
-            # for CDC consumers, exactly like the append-evolution path)
-            actions.append(self._metadata_update(snap, evolved))
         self._validate_constraints(rewritten, snap.configuration)
-        if rt:
-            mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
-            rewritten = rewritten.withColumnRenamed(
-                "row_id", mat_id
-            ).withColumnRenamed("row_commit_version", mat_rcv)
-        actions.extend(
-            self._stage_and_move(
-                rewritten, snap.partition_columns, mapping=self._mapping_of(snap)
+
+        def change_rows() -> DataFrame:
+            # exact MERGE change rows: update_preimage = touched LIVE
+            # rows whose key matches the source; update_postimage = the
+            # matching source rows; insert = source rows with no
+            # existing key. A reader-side derivation from remove+add
+            # cannot express pre/post images.
+            if not touched:
+                return aligned_source.withColumn("_change_type", F.lit("insert"))
+            pre = live.join(keys, key_cols, "left_semi").select(*table_cols)
+            matched_keys = pre.select(*key_cols).distinct()
+            post = aligned_source.join(matched_keys, key_cols, "left_semi")
+            ins = aligned_source.join(matched_keys, key_cols, "left_anti")
+            return (
+                pre.withColumn("_change_type", F.lit("update_preimage"))
+                .unionByName(post.withColumn("_change_type", F.lit("update_postimage")))
+                .unionByName(ins.withColumn("_change_type", F.lit("insert")))
             )
-        )
-        if _cdf_enabled(snap.configuration):
-            # exact MERGE change rows (Delta "Change Data Feed"):
-            # update_preimage = touched LIVE rows whose key matches the
-            # source; update_postimage = the matching source rows;
-            # insert = source rows with no existing key. A reader-side
-            # derivation from remove+add cannot express pre/post images
-            # — that is the entire point of cdc files.
-            ct = F.lit
-            if touched:
-                pre = (
-                    _fill_new(self._scan_live(spark, snap, touched))
-                    .join(keys, key_cols, "left_semi")
-                    .select(*table_cols)
-                )
-                matched_keys = pre.select(*key_cols).distinct()
-                post = aligned_source.join(matched_keys, key_cols, "left_semi")
-                ins = aligned_source.join(matched_keys, key_cols, "left_anti")
-                change_rows = (
-                    pre.withColumn("_change_type", ct("update_preimage"))
-                    .unionByName(post.withColumn("_change_type", ct("update_postimage")))
-                    .unionByName(ins.withColumn("_change_type", ct("insert")))
-                )
-            else:
-                change_rows = aligned_source.withColumn("_change_type", ct("insert"))
-            actions.extend(
-                self._stage_and_move(
-                    change_rows,
-                    snap.partition_columns,
-                    mapping=self._mapping_of(snap),
-                    cdc=True,
-                )
-            )
-            actions.extend(self._cdf_protocol_actions(snap))
-        return self._commit(
-            actions, operation="MERGE", read_version=snap.version,
-            configuration=snap.configuration,
+
+        # the widened schema rides the SAME commit (op='m' boundary for
+        # CDC consumers, exactly like the append-evolution path)
+        return self._rewrite_commit(
+            snap, "MERGE", touched, rewritten, change_rows=change_rows,
+            actions=[self._metadata_update(snap, evolved)] if evolved else (),
         )
 
     @staticmethod
@@ -4628,12 +4644,8 @@ class DeltaTable:
     def _remove_action(
         snap: Snapshot, path: str, now_ms: int, data_change: bool = True
     ) -> dict:
-        """Build a remove action, COPYING the removed file's
-        deletionVector descriptor when it carries one (ADVICE r7 #2:
-        cdc() keys its row filter on the action's DV, so a rewrite of a
-        DV-carrying file without the descriptor would re-emit the
-        already-deleted rows as op='d' change events; the spec's
-        remove-carries-DV shape is also what vacuum accounting reads)."""
+        """A remove action for ``path`` that copies the file's
+        deletion-vector descriptor (rules: :meth:`_rewrite_commit`)."""
         r: dict = {
             "path": path,
             "deletionTimestamp": now_ms,
@@ -4658,8 +4670,8 @@ class DeltaTable:
     ) -> int:
         """Row-level delete WITHOUT rewriting data files: write deletion
         vectors and re-add each touched file with its DV descriptor —
-        the merge-on-read shape (Delta PROTOCOL.md "Deletion Vectors";
-        remove+add of the same path with ``dataChange=true``). At 100 TB
+        the merge-on-read shape (Delta PROTOCOL.md "Deletion Vectors":
+        remove+add of the same path). At 100 TB
         this turns "delete 0.1% of rows" from a full rewrite of every
         touched file into a bitmap write per file.
 
@@ -4679,12 +4691,8 @@ class DeltaTable:
         candidates = self.prune_files(
             snap, self._phys_filters(snap, filters)
         ) if filters else list(snap.files)
-        now_ms = int(time.time() * 1000)
         if not candidates:
-            return self._commit(
-                [], operation="DELETE", read_version=snap.version,
-                configuration=snap.configuration,
-            )
+            return self._rewrite_commit(snap, "DELETE")
         # Already-deleted rows may re-match the predicate — harmless:
         # the union with the old DV below makes re-deletion idempotent,
         # and skipping the DV apply here saves a join. Mapped tables
@@ -4780,18 +4788,11 @@ class DeltaTable:
                 {"_fp": r._fp, "_desc": json.dumps(d)}
                 for r, d in zip(staged, descs)
             ]
-        actions: list[dict] = []
-        if desc_rows:
-            # DV writes require the table-features protocol; merged with
-            # the prior protocol so existing features survive (the spec
-            # forbids dropping features — ADVICE r7 #1)
-            actions.append({"protocol": _dv_upgraded_protocol(snap.protocol)})
+        touched, readds = [], []
         for r in desc_rows:
             rel = os.path.relpath(r["_fp"], base)
             old_add = dict(snap.adds[rel])
-            remove = self._remove_action(snap, rel, now_ms)
             old_add["deletionVector"] = json.loads(r["_desc"])
-            old_add["dataChange"] = True
             # spec ("Per-file Statistics" × DVs): a DV-carrying add's
             # stats keep the PHYSICAL numRecords and valid-but-not-
             # tight min/max — declared via tightBounds=false (deletion
@@ -4801,28 +4802,22 @@ class DeltaTable:
                 s = json.loads(stats) if isinstance(stats, str) else dict(stats)
                 s["tightBounds"] = False
                 old_add["stats"] = json.dumps(s)
-            actions.extend([remove, {"add": old_add}])
-        if desc_rows and _cdf_enabled(snap.configuration):
-            # exact delete change rows: the LIVE rows matching the
-            # predicate (the pre-filter `matched` above may re-match
-            # already-DV-deleted rows — those must NOT re-report)
-            deleted_rows = (
+            touched.append(rel)
+            readds.append(old_add)
+
+        def change_rows() -> DataFrame:
+            # the LIVE rows matching the predicate (the pre-filter
+            # `matched` above may re-match already-DV-deleted rows —
+            # those must NOT re-report)
+            return (
                 self._scan_live(spark, snap, candidates)
                 .where(predicate)
                 .withColumn("_change_type", F.lit("delete"))
             )
-            actions.extend(
-                self._stage_and_move(
-                    deleted_rows,
-                    snap.partition_columns,
-                    mapping=self._mapping_of(snap),
-                    cdc=True,
-                )
-            )
-            actions.extend(self._cdf_protocol_actions(snap))
-        return self._commit(
-            actions, operation="DELETE", read_version=snap.version,
-            configuration=snap.configuration,
+
+        return self._rewrite_commit(
+            snap, "DELETE", touched, adds=readds,
+            change_rows=change_rows if touched else None,
         )
 
     def update_where(
@@ -4872,10 +4867,7 @@ class DeltaTable:
             snap, self._phys_filters(snap, filters)
         ) if filters else list(snap.files)
         if not candidates:
-            return self._commit(
-                [], operation="UPDATE", read_version=snap.version,
-                configuration=snap.configuration,
-            )
+            return self._rewrite_commit(snap, "UPDATE")
         # touch detection: only file paths reach the driver
         probe = self._scan_logical_meta(spark, snap, candidates)
         touched_abs = [
@@ -4885,22 +4877,11 @@ class DeltaTable:
         base = os.path.abspath(self.path)
         touched = [os.path.relpath(p, base) for p in touched_abs]
         if not touched:
-            return self._commit(
-                [], operation="UPDATE", read_version=snap.version,
-                configuration=snap.configuration,
-            )
-        rt = _rt_enabled(snap.configuration)
-        # row-tracked tables: kept rows preserve (row_id, commit version)
-        # through the materialized columns; UPDATED rows keep their
-        # row_id but take a NULL materialized commit version, falling
-        # back to the new file's defaultRowCommitVersion — i.e. "row
-        # modified at this commit", the spec's semantics.
-        live = (
-            self._scan_live_rt(spark, snap, touched)
-            if rt
-            else self._scan_live(spark, snap, touched)
-        )
-        rt_keep = ["row_id", "row_commit_version"] if rt else []
+            return self._rewrite_commit(snap, "UPDATE")
+        # row-tracked tables: kept rows keep (row_id, commit version);
+        # UPDATED rows keep their row_id with a NULL commit version
+        rt_cols = ["row_id", "row_commit_version"] if _rt_enabled(snap.configuration) else []
+        live = self._rewrite_source(spark, snap, touched)
         p = F.expr(predicate)
         matched = live.where(p)
         kept = live.where((~p) | p.isNull())
@@ -4910,50 +4891,24 @@ class DeltaTable:
                 for c in table_cols
             ]
             + ([F.col("row_id"),
-                F.lit(None).cast("long").alias("row_commit_version")] if rt else [])
+                F.lit(None).cast("long").alias("row_commit_version")] if rt_cols else [])
         )
         if gen:
             # recompute generated columns over the post-assignment row
             # (their referenced base columns may have changed)
             updated = self._apply_generated(
                 updated.drop(*gen.keys()), snap.schema_string
-            ).select(*table_cols, *rt_keep)
+            ).select(*table_cols, *rt_cols)
         self._validate_constraints(updated, snap.configuration)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [self._remove_action(snap, pth, now_ms) for pth in touched]
-        staged = kept.unionByName(updated)
-        if rt:
-            mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
-            staged = staged.withColumnRenamed("row_id", mat_id).withColumnRenamed(
-                "row_commit_version", mat_rcv
-            )
-        actions.extend(
-            self._stage_and_move(
-                staged,
-                snap.partition_columns,
-                mapping=self._mapping_of(snap),
-            )
-        )
-        if _cdf_enabled(snap.configuration):
-            change_rows = matched.select(*table_cols).withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
+        return self._rewrite_commit(
+            snap, "UPDATE", touched, kept.unionByName(updated),
+            change_rows=lambda: matched.select(*table_cols)
+            .withColumn("_change_type", F.lit("update_preimage"))
+            .unionByName(
                 updated.select(*table_cols).withColumn(
                     "_change_type", F.lit("update_postimage")
                 )
-            )
-            actions.extend(
-                self._stage_and_move(
-                    change_rows,
-                    snap.partition_columns,
-                    mapping=self._mapping_of(snap),
-                    cdc=True,
-                )
-            )
-            actions.extend(self._cdf_protocol_actions(snap))
-        return self._commit(
-            actions, operation="UPDATE", read_version=snap.version,
-            configuration=snap.configuration,
+            ),
         )
 
     def delete_where(
@@ -4977,39 +4932,14 @@ class DeltaTable:
         touched = self.prune_files(
             snap, self._phys_filters(snap, filters)
         ) if filters else list(snap.files)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [self._remove_action(snap, p, now_ms) for p in touched]
-        if touched:
-            # live visibility (never _read_files: rewriting a file that
-            # carries a DV must not resurrect its deleted rows); on a
-            # row-tracked table survivors keep their ids via the
-            # materialized columns riding along
-            kept = self._rewrite_source(spark, snap, touched).where(
-                f"NOT ({predicate})"
-            )
-            actions.extend(
-                self._stage_and_move(
-                    kept, snap.partition_columns, mapping=self._mapping_of(snap)
-                )
-            )
-            if _cdf_enabled(snap.configuration):
-                deleted_rows = (
-                    self._scan_live(spark, snap, touched)
-                    .where(predicate)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-                actions.extend(
-                    self._stage_and_move(
-                        deleted_rows,
-                        snap.partition_columns,
-                        mapping=self._mapping_of(snap),
-                        cdc=True,
-                    )
-                )
-                actions.extend(self._cdf_protocol_actions(snap))
-        return self._commit(
-            actions, operation="DELETE", read_version=snap.version,
-            configuration=snap.configuration,
+        if not touched:
+            return self._rewrite_commit(snap, "DELETE")
+        return self._rewrite_commit(
+            snap, "DELETE", touched,
+            self._rewrite_source(spark, snap, touched).where(f"NOT ({predicate})"),
+            change_rows=lambda: self._scan_live(spark, snap, touched)
+            .where(predicate)
+            .withColumn("_change_type", F.lit("delete")),
         )
 
     def diff(
@@ -5096,19 +5026,10 @@ class DeltaTable:
             self._validate_constraints(
                 self.read(spark), {self.CONSTRAINT_PREFIX + name: expr}
             )
-        config = dict(snap.configuration)
-        config[self.CONSTRAINT_PREFIX + name] = expr
-        md = {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema_string,
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-            }
-        }
-        return self._commit(
-            [md], operation="ADD CONSTRAINT", read_version=snap.version
+        config = {**snap.configuration, self.CONSTRAINT_PREFIX + name: expr}
+        return self._rewrite_commit(
+            snap, "ADD CONSTRAINT",
+            actions=[self._metadata_update(snap, snap.schema_string, config)],
         )
 
     def drop_constraint(self, name: str) -> int:
@@ -5117,17 +5038,9 @@ class DeltaTable:
         if key not in snap.configuration:
             raise DeltaProtocolError(f"no such constraint: {name}")
         config = {k: v for k, v in snap.configuration.items() if k != key}
-        md = {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema_string,
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-            }
-        }
-        return self._commit(
-            [md], operation="DROP CONSTRAINT", read_version=snap.version
+        return self._rewrite_commit(
+            snap, "DROP CONSTRAINT",
+            actions=[self._metadata_update(snap, snap.schema_string, config)],
         )
 
     # domains whose semantics THIS writer implements and maintains via
@@ -5176,29 +5089,12 @@ class DeltaTable:
             )
         snap = self.snapshot()
         self._guard_writable(snap, data_change_removes=False)
-        actions: list[dict] = []
-        if "domainMetadata" not in (snap.protocol.get("writerFeatures") or ()):
-            actions.append(
-                {
-                    "protocol": _upgraded_protocol(
-                        snap.protocol, (), ("domainMetadata",)
-                    )
-                }
-            )
-        actions.append(
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": configuration,
-                    "removed": False,
-                }
-            }
-        )
-        return self._commit(
-            actions,
-            operation="SET DOMAIN METADATA",
-            read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite_commit(
+            snap, "SET DOMAIN METADATA",
+            actions=[{"domainMetadata": {
+                "domain": domain, "configuration": configuration, "removed": False,
+            }}],
+            writer_features=("domainMetadata",),
         )
 
     def remove_domain_metadata(self, domain: str) -> int:
@@ -5215,19 +5111,11 @@ class DeltaTable:
                 f"domain '{domain}' is not set on this table "
                 f"(live domains: {sorted(snap.domain_metadata) or 'none'})"
             )
-        return self._commit(
-            [
-                {
-                    "domainMetadata": {
-                        "domain": domain,
-                        "configuration": "",
-                        "removed": True,
-                    }
-                }
-            ],
-            operation="REMOVE DOMAIN METADATA",
-            read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite_commit(
+            snap, "REMOVE DOMAIN METADATA",
+            actions=[{"domainMetadata": {
+                "domain": domain, "configuration": "", "removed": True,
+            }}],
         )
 
     def restore(self, version: int | None = None, timestamp_ms: int | None = None) -> int:
@@ -5250,35 +5138,26 @@ class DeltaTable:
         if cur.version == target.version:
             return cur.version  # nothing to do
         self._guard_writable(cur)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = []
+        adds: list[dict] = []
         for p in sorted(set(target.files) - set(cur.files)):
             if not self.fs.exists(os.path.join(self.path, p)):
                 raise DeltaProtocolError(
                     f"restore to v{version} needs vacuumed file {p}"
                 )
-            add = dict(target.adds.get(p, {}))
-            add.setdefault("path", p)
-            add["dataChange"] = True
-            actions.append({"add": add})
-        for p in sorted(set(cur.files) - set(target.files)):
-            actions.append(self._remove_action(cur, p, now_ms))
+            adds.append({"path": p, **target.adds.get(p, {})})
+        md = []
         if target.schema_string and (
             target.schema_string != cur.schema_string
             or target.configuration != cur.configuration
         ):
-            actions.append(
-                {
-                    "metaData": {
-                        "id": "restore",
-                        "schemaString": target.schema_string,
-                        "partitionColumns": target.partition_columns,
-                        "format": {"provider": "parquet", "options": {}},
-                        "configuration": dict(target.configuration),
-                    }
-                }
-            )
-        return self._commit(actions, operation="RESTORE", read_version=cur.version)
+            md.append(self._metadata_update(
+                cur, target.schema_string, target.configuration,
+                target.partition_columns,
+            ))
+        return self._rewrite_commit(
+            cur, "RESTORE", sorted(set(cur.files) - set(target.files)),
+            adds=adds, actions=md,
+        )
 
     def clone_from(
         self,
@@ -5315,15 +5194,9 @@ class DeltaTable:
 
         actions: list[dict] = [
             {"protocol": dict(snap.protocol)},
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "schemaString": snap.schema_string,
-                    "partitionColumns": list(snap.partition_columns),
-                    "format": {"provider": "parquet", "options": {}},
-                    "configuration": dict(snap.configuration),
-                }
-            },
+            self._metadata_update(
+                None, snap.schema_string, snap.configuration, snap.partition_columns
+            ),
         ]
         # domain state rides along (spec: writers must preserve domains
         # they don't own) — without it a row-tracked clone would restart
@@ -5380,7 +5253,6 @@ class DeltaTable:
         if not rels:
             raise DeltaProtocolError(f"no parquet files under {self.path}")
         pcols: list[str] | None = None
-        now_ms = int(time.time() * 1000)
         # wide-lake guard: the default NumIndexedCols=32 policy applies
         # to conversion too (a 1000-column lake must not write kB of
         # stats per add)
@@ -5413,13 +5285,7 @@ class DeltaTable:
             }})
         actions: list[dict] = [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            {"metaData": {
-                "id": f"meta-{uuid.uuid4().hex[:12]}",
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": df.schema.json(),
-                "partitionColumns": pcols or [],
-                "configuration": {},
-            }},
+            self._metadata_update(None, df.schema.json(), {}, pcols or []),
         ] + adds
         return self._commit(actions, operation="CONVERT")
 
@@ -5463,15 +5329,7 @@ class DeltaTable:
                 read_version = -1
                 actions.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
                 actions.append(
-                    {
-                        "metaData": {
-                            "id": str(uuid.uuid4()),
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": schema_json,
-                            "partitionColumns": partition_by or [],
-                            "configuration": {},
-                        }
-                    }
+                    self._metadata_update(None, schema_json, {}, partition_by or [])
                 )
             else:
                 prior = self.snapshot()
@@ -5484,17 +5342,11 @@ class DeltaTable:
                     list(partition_by) if partition_by is not None else prior.partition_columns
                 )
                 if merged is not None or new_pcols != prior.partition_columns:
-                    actions.append(
-                        {
-                            "metaData": {
-                                "id": prior.table_id or str(uuid.uuid4()),
-                                "format": {"provider": "parquet", "options": {}},
-                                "schemaString": merged if merged is not None else (prior.schema_string or schema_json),
-                                "partitionColumns": new_pcols,
-                                "configuration": dict(configuration),
-                            }
-                        }
-                    )
+                    actions.append(self._metadata_update(
+                        prior,
+                        merged if merged is not None else (prior.schema_string or schema_json),
+                        partition_columns=new_pcols,
+                    ))
                     read_version = prior.version  # don't clobber a racing schema change
             actions.extend({"add": a} for a in adds)
             try:
@@ -5532,44 +5384,10 @@ class DeltaTable:
         config = dict(snap.configuration or {})
         config["delta.columnMapping.mode"] = "name"
         config["delta.columnMapping.maxColumnId"] = str(len(s["fields"]))
-        md = {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(s),
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-            }
-        }
-        actions = [
-            {"protocol": _upgraded_protocol(
-                snap.protocol, ("columnMapping",), ("columnMapping",)
-            )},
-            md,
-        ]
-        return self._commit(
-            actions, operation="UPGRADE", read_version=snap.version
-        )
-
-    def _mapped_metadata_commit(
-        self, snap: Snapshot, schema: dict, operation: str,
-        configuration: dict | None = None,
-    ) -> int:
-        config = dict(
-            snap.configuration if configuration is None else configuration
-        )
-        md = {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema),
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-            }
-        }
-        return self._commit(
-            [md], operation=operation, read_version=snap.version,
-            configuration=config,
+        return self._rewrite_commit(
+            snap, "UPGRADE",
+            actions=[self._metadata_update(snap, json.dumps(s), config)],
+            reader_features=("columnMapping",), writer_features=("columnMapping",),
         )
 
     def _guard_column_referenced(self, snap: Snapshot, name: str) -> None:
@@ -5650,8 +5468,9 @@ class DeltaTable:
                 config["delta.dataSkippingStatsColumns"] = ",".join(
                     new if p == old else p for p in parts if p
                 )
-        return self._mapped_metadata_commit(
-            snap, s, "RENAME COLUMN", configuration=config
+        return self._rewrite_commit(
+            snap, "RENAME COLUMN",
+            actions=[self._metadata_update(snap, json.dumps(s), config)],
         )
 
     def drop_column(self, name: str) -> int:
@@ -5678,7 +5497,9 @@ class DeltaTable:
         self._guard_column_referenced(snap, name)
         self._guard_stats_cols_referenced(snap, name)
         s["fields"] = [f for f in s["fields"] if f["name"] != name]
-        return self._mapped_metadata_commit(snap, s, "DROP COLUMN")
+        return self._rewrite_commit(
+            snap, "DROP COLUMN", actions=[self._metadata_update(snap, json.dumps(s))]
+        )
 
     def compact(
         self,
@@ -5687,9 +5508,8 @@ class DeltaTable:
         filters: list[tuple[str, str, object]] | None = None,
     ) -> int:
         """OPTIMIZE-style bin-packing: rewrite the current snapshot's
-        files into ``target_files`` per partition, committing
-        remove+add with dataChange=false semantics (CDC readers skip
-        pure-compaction commits). The small-files problem is the #1
+        files into ``target_files`` per partition in one
+        ``dataChange=false`` commit. The small-files problem is the #1
         operational issue of streaming ingestion at scale.
 
         ``filters`` is OPTIMIZE ... WHERE (round 9): only files whose
@@ -5712,24 +5532,10 @@ class DeltaTable:
             targets = self.prune_files(snap, filters)
             if not targets:
                 return snap.version  # nothing selected: no-op
-        # row-tracked tables: the rewrite carries materialized row ids
-        df = self._rewrite_source(spark, snap, targets).coalesce(
-            target_files
-        )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            self._remove_action(snap, p, now_ms, data_change=False)
-            for p in targets
-        ]
-        adds = self._stage_and_move(
-            df, snap.partition_columns, mapping=self._mapping_of(snap)
-        )
-        for a in adds:
-            a["add"]["dataChange"] = False
-        actions.extend(adds)
-        return self._commit(
-            actions, operation="OPTIMIZE", read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite_commit(
+            snap, "OPTIMIZE", targets,
+            self._rewrite_source(spark, snap, targets).coalesce(target_files),
+            data_change=False,
         )
 
     def clustering_columns(self, snap: "Snapshot | None" = None) -> list[str]:
@@ -5794,16 +5600,10 @@ class DeltaTable:
         # type at commit time, or every later write would fail
         F.expr(default_sql)
         field.setdefault("metadata", {})["CURRENT_DEFAULT"] = default_sql
-        actions: list[dict] = []
-        feats = set(snap.protocol.get("writerFeatures") or ())
-        if "allowColumnDefaults" not in feats:
-            actions.append({"protocol": _upgraded_protocol(
-                snap.protocol, (), ("allowColumnDefaults",)
-            )})
-        actions.append(self._metadata_update(snap, json.dumps(s)))
-        return self._commit(
-            actions, operation="ALTER COLUMN", read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite_commit(
+            snap, "ALTER COLUMN",
+            actions=[self._metadata_update(snap, json.dumps(s))],
+            writer_features=("allowColumnDefaults",),
         )
 
     def drop_column_default(self, column: str) -> int:
@@ -5816,26 +5616,9 @@ class DeltaTable:
         if "CURRENT_DEFAULT" not in (field.get("metadata") or {}):
             return snap.version  # no default: no-op
         del field["metadata"]["CURRENT_DEFAULT"]
-        return self._commit(
-            [self._metadata_update(snap, json.dumps(s))],
-            operation="ALTER COLUMN", read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite_commit(
+            snap, "ALTER COLUMN", actions=[self._metadata_update(snap, json.dumps(s))]
         )
-
-    def _metadata_update(
-        self, snap: Snapshot, schema_string: str, configuration: dict | None = None
-    ) -> dict:
-        """A metaData action carrying the current table identity with a
-        replaced schemaString (and optionally a replaced configuration)."""
-        return {"metaData": {
-            "id": f"meta-{uuid.uuid4().hex[:12]}",
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": schema_string,
-            "partitionColumns": snap.partition_columns,
-            "configuration": dict(
-                snap.configuration or {} if configuration is None else configuration
-            ),
-        }}
 
     def set_properties(self, props: dict[str, str]) -> int:
         """ALTER TABLE ... SET TBLPROPERTIES: a metadata-only commit
@@ -5848,28 +5631,22 @@ class DeltaTable:
         — the handshake delta-spark performs on ALTER TABLE
         (PROTOCOL.md "In-Commit Timestamps")."""
         snap = self.snapshot()
-        cfg = dict(snap.configuration or {})
-        cfg.update(props)
-        actions: list[dict] = []
-        if props.get("delta.enableInCommitTimestamps") == "true":
-            feats = set(snap.protocol.get("writerFeatures") or ())
-            if not feats & {"inCommitTimestamp", "inCommitTimestamp-preview"}:
-                actions.append({"protocol": _upgraded_protocol(
-                    snap.protocol, (), ("inCommitTimestamp",)
-                )})
+        features: list[str] = []
+        if props.get("delta.enableInCommitTimestamps") == "true" and not set(
+            snap.protocol.get("writerFeatures") or ()
+        ) & {"inCommitTimestamp", "inCommitTimestamp-preview"}:
+            features.append("inCommitTimestamp")
         if props.get("delta.requireCheckpointProtectionBeforeVersion"):
             # the property is meaningless without its enforcing feature
             # (a non-supporting writer would ignore the boundary), so
             # setting it performs the protocol handshake too
-            feats = set(snap.protocol.get("writerFeatures") or ())
-            if "checkpointProtection" not in feats:
-                actions.append({"protocol": _upgraded_protocol(
-                    snap.protocol, (), ("checkpointProtection",)
-                )})
-        actions.append(self._metadata_update(snap, snap.schema_string, cfg))
-        return self._commit(
-            actions, operation="SET TBLPROPERTIES", read_version=snap.version,
-            configuration=snap.configuration,
+            features.append("checkpointProtection")
+        return self._rewrite_commit(
+            snap, "SET TBLPROPERTIES",
+            actions=[self._metadata_update(
+                snap, snap.schema_string, {**snap.configuration, **props}
+            )],
+            writer_features=tuple(features),
         )
 
     def alter_cluster_by(self, cluster_by: list[str]) -> int:
@@ -5889,29 +5666,21 @@ class DeltaTable:
         missing = [c for c in cluster_by if c not in schema_cols]
         if missing:
             raise DeltaProtocolError(f"clustering columns not in schema: {missing}")
-        actions: list[dict] = []
-        feats = set(snap.protocol.get("writerFeatures") or ())
-        if cluster_by and not {"clusteredTable", "domainMetadata"} <= feats:
-            actions.append({"protocol": _upgraded_protocol(
-                snap.protocol, (), ("clusteredTable", "domainMetadata")
-            )})
         if cluster_by:
-            actions.append({"domainMetadata": {
+            dm = {
                 "domain": "delta.clustering",
                 "configuration": json.dumps(
                     {"clusteringColumns": [[c] for c in cluster_by]}
                 ),
                 "removed": False,
-            }})
+            }
         elif "delta.clustering" in snap.domain_metadata:
-            actions.append({"domainMetadata": {
-                "domain": "delta.clustering", "configuration": "", "removed": True,
-            }})
+            dm = {"domain": "delta.clustering", "configuration": "", "removed": True}
         else:
             return snap.version  # CLUSTER BY NONE on unclustered: no-op
-        return self._commit(
-            actions, operation="CLUSTER BY", read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite_commit(
+            snap, "CLUSTER BY", actions=[{"domainMetadata": dm}],
+            writer_features=("clusteredTable", "domainMetadata") if cluster_by else (),
         )
 
     def optimize_clustered(
@@ -5919,8 +5688,8 @@ class DeltaTable:
     ) -> int:
         """OPTIMIZE on a liquid-clustered table: rewrite the snapshot in
         HILBERT order over the delta.clustering columns into
-        ``target_files`` range-disjoint files, dataChange=false (CDC
-        readers skip it, exactly like bin-packing compact()).
+        ``target_files`` range-disjoint files, ``dataChange=false`` like
+        compact()).
 
         Why Hilbert and not Z-order: consecutive Hilbert index values
         are always grid neighbors, so each output file covers one
@@ -5958,20 +5727,8 @@ class DeltaTable:
             .sortWithinPartitions("_h")
             .drop("_h")
         )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            self._remove_action(snap, p, now_ms, data_change=False)
-            for p in snap.files
-        ]
-        adds = self._stage_and_move(
-            ordered, snap.partition_columns, mapping=self._mapping_of(snap)
-        )
-        for a in adds:
-            a["add"]["dataChange"] = False
-        actions.extend(adds)
-        return self._commit(
-            actions, operation="OPTIMIZE", read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite_commit(
+            snap, "OPTIMIZE", list(snap.files), ordered, data_change=False
         )
 
     def reorg_purge(self, spark: SparkSession) -> int:
@@ -5981,14 +5738,11 @@ class DeltaTable:
         the third step of the merge-on-read lifecycle — DELETE writes
         the bitmap, PURGE materializes it, VACUUM reclaims the ``.bin``
         and the superseded data file. Logical table content is
-        unchanged, so the commit is ``dataChange=false`` (CDC readers
-        skip it, exactly like OPTIMIZE).
+        unchanged, so the commit is ``dataChange=false`` like OPTIMIZE.
 
         Scale shape: cost is O(files-with-DVs), not O(table) — a 100 TB
         table where 0.1% of files accumulated DVs rewrites that 0.1%.
-        The remove actions carry the purged DV descriptors so vacuum
-        accounting sees the dead bitmaps. No-op (empty commit) when no
-        live file carries a DV."""
+        No-op (empty commit) when no live file carries a DV."""
         snap = self.snapshot()
         self._guard_writable(snap, data_change_removes=False)
         touched = [
@@ -5997,21 +5751,10 @@ class DeltaTable:
             if (dv := snap.adds.get(p, {}).get("deletionVector"))
             and int(dv.get("cardinality") or 0) > 0
         ]
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            self._remove_action(snap, p, now_ms, data_change=False) for p in touched
-        ]
-        if touched:
-            live = self._rewrite_source(spark, snap, touched)
-            adds = self._stage_and_move(
-                live, snap.partition_columns, mapping=self._mapping_of(snap)
-            )
-            for a in adds:
-                a["add"]["dataChange"] = False
-            actions.extend(adds)
-        return self._commit(
-            actions, operation="REORG", read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite_commit(
+            snap, "REORG", touched,
+            self._rewrite_source(spark, snap, touched) if touched else None,
+            data_change=False,
         )
 
     def vacuum(
