@@ -23,10 +23,18 @@ actions are served from their ``_change_data`` files (exact
 other commits derive insert/delete — the schema swaps ``op`` for
 ``_change_type``, matching what delta-spark CDF consumers expect.
 
-Scale notes: planning is file-granular — each input partition is one
-(file, op, version) triple read by executors as Arrow batches straight
-from parquet (no driver materialization). A 10k-file commit fans out to
-10k parallelizable partitions.
+Scale notes: admission control, offsets, pushdown pruning and the
+deletion-vector guard work on file slices, one (file, op, version)
+each. ``_pack`` then groups the planned slices into input partitions by
+Spark's file-scan rule: slices keep log order, each file stays whole, a
+file weighs its log-recorded size plus a 4 MiB open cost, and a
+partition closes before it would pass 128 MiB (Spark's
+``openCostInBytes`` / ``maxPartitionBytes`` defaults). Each input
+partition is one Python worker task, which costs about 0.3 CPU-s before
+it reads a byte (4-core rig), so a small commit is one task per scan,
+not one per file; a 10k-file commit still fans out to at least 313
+partitions. Executors read them as Arrow batches straight from parquet
+(no driver materialization).
 """
 
 from __future__ import annotations
@@ -143,6 +151,35 @@ class _FileSlice(InputPartition):
     size: int = 0
 
 
+# Spark's file-scan packing defaults (spark.sql.files.openCostInBytes,
+# spark.sql.files.maxPartitionBytes)
+_OPEN_COST_BYTES = 4 << 20
+_MAX_PARTITION_BYTES = 128 << 20
+
+
+@dataclass
+class _SliceGroup(InputPartition):
+    slices: tuple[_FileSlice, ...]
+
+
+def _pack(slices: list[_FileSlice]) -> list[_SliceGroup]:
+    """Input partitions by the rule in the module docstring: Spark's
+    file-scan packing without its spread-across-cores clause."""
+    groups: list[_SliceGroup] = []
+    group: list[_FileSlice] = []
+    weight = 0
+    for s in slices:
+        w = s.size + _OPEN_COST_BYTES
+        if group and weight + w > _MAX_PARTITION_BYTES:
+            groups.append(_SliceGroup(tuple(group)))
+            group, weight = [], 0
+        group.append(s)
+        weight += w
+    if group:
+        groups.append(_SliceGroup(tuple(group)))
+    return groups
+
+
 def _plan_slices(
     table_path: str,
     start_version: int,
@@ -150,8 +187,8 @@ def _plan_slices(
     change_feed: bool = False,
     filters: list[tuple[str, str, object]] | None = None,
 ) -> list[_FileSlice]:
-    """One input partition per file `DeltaTable.plan_changes` reports for
-    commits in [start, end] (``change_feed``: option ``readChangeFeed``).
+    """One slice per file `DeltaTable.plan_changes` reports for commits
+    in [start, end] (``change_feed``: option ``readChangeFeed``).
 
     Deletion-vector guard: a derived slice over a DV-carrying file would
     emit the file's DELETED rows too (this arrow path reads whole
@@ -194,16 +231,20 @@ def _plan_slices(
     return slices
 
 
-def _read_slice(slice_: _FileSlice | None, schema: StructType):
+def _read_group(group: _SliceGroup | None, schema: StructType):
+    """Yield Arrow RecordBatches for every slice of one input partition,
+    in order. Zero planned partitions (everything pruned): Spark still
+    calls read() once with None — an empty iterator is the contract."""
+    for slice_ in group.slices if group is not None else ():
+        yield from _read_slice(slice_, schema)
+
+
+def _read_slice(slice_: _FileSlice, schema: StructType):
     """Yield Arrow RecordBatches for one file slice with envelope +
     partition columns attached (runs on executors; pyarrow only)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if slice_ is None:
-        # zero planned partitions (everything pruned): Spark still calls
-        # read() once with None — an empty iterator is the contract
-        return
     fp = os.path.join(slice_.table_path, slice_.rel_path)
     pvals = dict(slice_.partition_values)
     arrow_schema = pa.schema(
@@ -328,16 +369,18 @@ class _CdcBatchReader(DataSourceReader):
         data_filters = [
             (c, op, v) for c, op, v in self._pruning if c != "_commit_version"
         ]
-        return _plan_slices(
-            self.table_path,
-            start,
-            end,
-            change_feed=self.change_feed,
-            filters=data_filters or None,
+        return _pack(
+            _plan_slices(
+                self.table_path,
+                start,
+                end,
+                change_feed=self.change_feed,
+                filters=data_filters or None,
+            )
         )
 
-    def read(self, partition: _FileSlice):
-        yield from _read_slice(partition, self.schema_)
+    def read(self, partition: _SliceGroup | None):
+        yield from _read_group(partition, self.schema_)
 
 
 class _CdcStreamReader(DataSourceStreamReader):
@@ -362,6 +405,13 @@ class _CdcStreamReader(DataSourceStreamReader):
 
     File/byte caps split WITHIN a commit (sub-commit offsets); the
     checkpoint keeps exactly-once across restarts mid-commit.
+
+    Caps and offsets count slices; ``partitions()`` packs the admitted
+    slices (``_pack``), so a 5-file commit is one Python task, not five.
+
+    The log head is listed once; later polls advance it by probing for
+    the next commit file, so an idle poll (about 100 a second) is one
+    stat, not a listing and parse of all of ``_delta_log``.
     """
 
     def __init__(self, schema: StructType, options):
@@ -394,6 +444,8 @@ class _CdcStreamReader(DataSourceStreamReader):
         # inside (or just before) it resumes there on the next call, and
         # a committed version's slices never change
         self._planned: tuple[int, list[_FileSlice]] | None = None
+        # newest commit seen; None until the first poll lists the log
+        self._head: int | None = None
 
     @staticmethod
     def _pos(offset: dict) -> tuple[int, int]:
@@ -410,17 +462,25 @@ class _CdcStreamReader(DataSourceStreamReader):
             )
         return self._planned[1]
 
+    def _latest_version(self) -> int:
+        from pulsar_io_delta_spark.sources.delta_log import DeltaTable
+
+        t = DeltaTable(self.table_path)
+        if self._head is None:
+            self._head = t.latest_version()
+        while t.fs.exists(os.path.join(t.log_dir, f"{self._head + 1:020d}.json")):
+            self._head += 1
+        return self._head
+
     def initialOffset(self) -> dict:
         self._seed((self.start, 0))
         return {"version": self.start, "index": 0}
 
     def latestOffset(self) -> dict:
-        from pulsar_io_delta_spark.sources.delta_log import DeltaTable
-
         base_v, base_i = (
             self._next_unread if self._next_unread is not None else (self.start, 0)
         )
-        latest_end = DeltaTable(self.table_path).latest_version() + 1
+        latest_end = self._latest_version() + 1
         if self.stop_after >= 0:
             latest_end = min(latest_end, self.stop_after + 1)
         if self.max_versions is not None:
@@ -478,10 +538,10 @@ class _CdcStreamReader(DataSourceStreamReader):
             if s.version == ev and ei and k >= ei:
                 continue
             out.append(s)
-        return out
+        return _pack(out)
 
-    def read(self, partition: _FileSlice):
-        yield from _read_slice(partition, self.schema_)
+    def read(self, partition: _SliceGroup | None):
+        yield from _read_group(partition, self.schema_)
 
     def commit(self, end: dict) -> None:
         # Progress is durable in the stream's checkpointLocation; keep the

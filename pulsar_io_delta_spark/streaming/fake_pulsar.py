@@ -16,7 +16,8 @@ closes the egress semantic with an in-process test double:
   ``functions.murmur3``), client-side batching (``batch_max`` messages
   per flush, batch id recorded per message, order preserved across
   flushes), and per-message event time + properties;
-- ``publish`` — drives a DataFrame through the producer.
+- ``publish`` — drives a DataFrame through the producer, routed by the
+  frame's ``partition_id`` column when it has one.
 
 Scale note: the broker object is driver-side, so ``publish`` streams
 ``toLocalIterator()`` — the right shape for a TEST double. The
@@ -140,12 +141,15 @@ def publish(
     batch_max: int = 100,
     event_time_col: str | None = None,
 ) -> FakePulsarProducer:
-    """Drive a wire frame (key string, value binary[, event time]) into
-    the fake broker, preserving the frame's row order (sort upstream for
-    deterministic per-partition sequences)."""
+    """Drive a wire frame (key string, value binary[, event time][,
+    partition_id]) into the fake broker, preserving the frame's row
+    order (sort upstream for deterministic per-partition sequences). A
+    frame's ``partition_id`` column (``to_pulsar_wire``'s murmur3 slot)
+    routes each row; a frame without one is routed by key."""
     broker.create_topic(topic, num_partitions)
     producer = FakePulsarProducer(broker, topic, batch_max=batch_max)
     cols = set(wire.columns)
+    routed = "partition_id" in cols
     for row in wire.toLocalIterator():
         et = None
         if event_time_col and event_time_col in cols:
@@ -158,6 +162,7 @@ def publish(
             value=row["value"] if isinstance(row["value"], (bytes, bytearray)) else str(row["value"]).encode(),
             event_time_ms=et,
             properties={"TS": str(et)} if et is not None else {},
+            partition=row["partition_id"] if routed else None,
         )
     producer.close()
     return producer

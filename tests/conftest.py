@@ -16,3 +16,9 @@ def spark():
 @pytest.fixture()
 def sf_dir():
     return SF_DIR
+
+
+def planned_slices(partitions) -> list:
+    """The file slices a pulsar_delta_cdc reader planned, in order,
+    flattened out of the input partitions they are packed into."""
+    return [s for group in partitions for s in group.slices]

@@ -5,6 +5,7 @@ import os
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import planned_slices
 
 from pulsar_io_delta_spark.sources.datasource import register_delta_cdc
 from pulsar_io_delta_spark.sources.delta_log import DeltaTable
@@ -321,11 +322,11 @@ def test_max_files_splits_within_a_commit(two_commit_table):
     assert o0 == {"version": 0, "index": 0}
     o1 = r.latestOffset()
     assert o1 == {"version": 0, "index": 3}  # mid-commit
-    p1 = r.partitions(o0, o1)
+    p1 = planned_slices(r.partitions(o0, o1))
     assert [s.version for s in p1] == [0, 0, 0]
     o2 = r.latestOffset()  # 1 leftover of v0 + both of v1
     assert o2 == {"version": 2, "index": 0}
-    p2 = r.partitions(o1, o2)
+    p2 = planned_slices(r.partitions(o1, o2))
     assert [s.version for s in p2] == [0, 1, 1]
     # no new commits: offset holds, zero partitions
     o3 = r.latestOffset()
@@ -343,7 +344,7 @@ def test_max_bytes_admits_at_least_one_slice(two_commit_table):
     for _ in range(6):
         offsets.append(r.latestOffset())
     for a, b in zip(offsets, offsets[1:]):
-        assert len(r.partitions(a, b)) == 1
+        assert len(planned_slices(r.partitions(a, b))) == 1
     assert offsets[-1] == {"version": 2, "index": 0}
 
 
@@ -365,10 +366,10 @@ def test_restart_resumes_mid_commit(two_commit_table):
     r.commit({"version": 0, "index": 2})
     o = r.latestOffset()
     assert o == {"version": 2, "index": 0}
-    parts = r.partitions({"version": 0, "index": 2}, o)
+    parts = planned_slices(r.partitions({"version": 0, "index": 2}, o))
     assert [s.version for s in parts] == [0, 0, 1, 1]
     # legacy checkpoint form (no index key) still resolves
-    assert len(r.partitions({"version": 0}, {"version": 2})) == 6
+    assert len(planned_slices(r.partitions({"version": 0}, {"version": 2}))) == 6
 
 
 def test_caps_compose_with_max_versions(two_commit_table):
@@ -378,6 +379,84 @@ def test_caps_compose_with_max_versions(two_commit_table):
     )
     r.initialOffset()
     assert r.latestOffset() == {"version": 1, "index": 0}
+
+
+def test_idle_polls_probe_for_the_next_commit(spark, two_commit_table, monkeypatch):
+    # the head is listed once; after that a poll stats <head+1>.json
+    from pulsar_io_delta_spark.sources.fs import LocalFileSystem
+
+    r = _stream_reader(two_commit_table)
+    r.initialOffset()
+    assert r.latestOffset() == {"version": 2, "index": 0}
+    listed: list[str] = []
+    real = LocalFileSystem.listdir
+
+    def counted(self, path):
+        listed.append(path)
+        return real(self, path)
+
+    monkeypatch.setattr(LocalFileSystem, "listdir", counted)
+    for _ in range(50):
+        assert r.latestOffset() == {"version": 2, "index": 0}
+    assert listed == []
+    DeltaTable(two_commit_table).write(spark.range(2).select(F.col("id").alias("event_id")))
+    listed.clear()
+    assert r.latestOffset() == {"version": 3, "index": 0}
+    assert listed == []
+
+
+# ---------------------------------------------------------------------------
+# Input-partition packing: admitted slices are packed, in log order and
+# each file whole, into groups of at most 128 MiB (a file weighs its
+# log-recorded size plus 4 MiB of open cost), so a small commit is one
+# Python task per scan instead of one per file.
+
+
+def test_small_commit_packs_into_one_partition(spark, tmp_path):
+    from pulsar_io_delta_spark.sources.datasource import _plan_slices
+
+    path = str(tmp_path / "five")
+    DeltaTable(path).write(spark.range(0, 10, 1, 5).select(F.col("id").alias("event_id")))
+    r = _stream_reader(path)
+    parts = r.partitions(r.initialOffset(), r.latestOffset())
+    assert len(parts) == 1
+    assert list(parts[0].slices) == _plan_slices(path, 0, 0)
+    assert len(parts[0].slices) == 5
+
+
+def test_packing_splits_at_the_partition_cap(two_commit_table, monkeypatch):
+    from pulsar_io_delta_spark.sources import datasource
+
+    mib = 1 << 20
+    sizes = iter([100 * mib, 10 * mib, 20 * mib, 124 * mib, 1, 1])
+    real = datasource._plan_slices
+
+    def sized(*args, **kwargs):
+        out = real(*args, **kwargs)
+        for s in out:
+            s.size = next(sizes)
+        return out
+
+    monkeypatch.setattr(datasource, "_plan_slices", sized)
+    r = _stream_reader(two_commit_table)
+    parts = r.partitions({"version": 0, "index": 0}, {"version": 2, "index": 0})
+    # weights 104, 14, 24, 128, 5, 5 MiB: a group closes before 128 MiB
+    assert [[s.size for s in g.slices] for g in parts] == [
+        [100 * mib, 10 * mib],
+        [20 * mib],
+        [124 * mib],
+        [1, 1],
+    ]
+    assert [(s.version, s.rel_path) for s in planned_slices(parts)] == [
+        (s.version, s.rel_path) for s in real(two_commit_table, 0, 1)
+    ]
+
+
+def test_capped_trigger_packs_its_admitted_slices(two_commit_table):
+    r = _stream_reader(two_commit_table, maxFilesPerTrigger=3)
+    o0 = r.initialOffset()
+    parts = r.partitions(o0, r.latestOffset())
+    assert len(parts) == 1 and len(parts[0].slices) == 3
 
 
 def test_stream_max_files_per_trigger_end_to_end(spark, two_commit_table, tmp_path):
@@ -445,7 +524,7 @@ def test_pushdown_prunes_by_partition_value(spark, pruned_table):
     r = _batch_reader(pruned_table)
     remaining = list(r.pushFilters([EqualTo(("event_type",), "click")]))
     assert len(remaining) == 1  # everything re-evaluated by Spark
-    parts = r.partitions()
+    parts = planned_slices(r.partitions())
     assert len(parts) == 2  # click file per commit; view files pruned
     assert all(dict(p.partition_values)["event_type"] == "click" for p in parts)
 
@@ -455,7 +534,7 @@ def test_pushdown_prunes_by_footer_stats(spark, pruned_table):
 
     r = _batch_reader(pruned_table)
     list(r.pushFilters([GreaterThan(("event_id",), 50)]))
-    parts = r.partitions()
+    parts = planned_slices(r.partitions())
     # v1's files hold event_id 0..9 only — their max stats exclude them
     assert all(p.version == 0 for p in parts)
 
@@ -465,13 +544,32 @@ def test_pushdown_bounds_version_walk(spark, pruned_table):
 
     r = _batch_reader(pruned_table)
     list(r.pushFilters([EqualTo(("_commit_version",), 1)]))
-    assert {p.version for p in r.partitions()} == {1}
+    assert {p.version for p in planned_slices(r.partitions())} == {1}
     r2 = _batch_reader(pruned_table)
     list(r2.pushFilters([LessThanOrEqual(("_commit_version",), 0)]))
-    assert {p.version for p in r2.partitions()} == {0}
+    assert {p.version for p in planned_slices(r2.partitions())} == {0}
     r3 = _batch_reader(pruned_table)
     list(r3.pushFilters([EqualTo(("_commit_version",), 7)]))
     assert r3.partitions() == []
+
+
+def test_all_pruned_batch_plans_nothing(spark, pruned_table):
+    from pyspark.sql.datasource import EqualTo
+
+    r = _batch_reader(pruned_table)
+    list(r.pushFilters([EqualTo(("event_type",), "none")]))
+    assert r.partitions() == []
+    assert list(r.read(None)) == []
+
+
+def test_multi_file_batch_read_is_one_partition(spark, two_commit_table):
+    register_delta_cdc(spark)
+    ds = spark.read.format("pulsar_delta_cdc").option("tablePath", two_commit_table).load()
+    assert ds.rdd.getNumPartitions() == 1
+    got = sorted((r.event_id, r.op, r._commit_version) for r in ds.collect())
+    ref = DeltaTable(two_commit_table).cdc(spark, start_version=0)
+    assert got == sorted((r.event_id, r.op, r._commit_version) for r in ref.collect())
+    assert len(got) == 12
 
 
 def test_pushdown_end_to_end_exact(spark, pruned_table):

@@ -82,3 +82,29 @@ def test_explicit_partition_overrides_routing():
     producer.send("any-key", b"x", partition=3)
     producer.close()
     assert len(broker.partition_log("explicit", 3)) == 1
+
+
+def test_frame_partition_id_routes_each_row(spark):
+    rows = [(f"k{i}", i % 4) for i in range(40)]
+    wire = spark.createDataFrame(rows, "key string, partition_id int").select(
+        "key", F.col("key").cast("binary").alias("value"), "partition_id"
+    )
+    broker = FakeBroker()
+    publish(wire, broker, "by_frame", 4)
+    for p in range(4):
+        assert {m.key for m in broker.partition_log("by_frame", p)} == {
+            k for k, slot in rows if slot == p
+        }
+
+
+def test_frame_without_partition_id_routes_by_key(spark):
+    rows = [(f"key-{i}",) for i in range(100)]
+    wire = spark.createDataFrame(rows, "key string").select(
+        "key", F.col("key").cast("binary").alias("value")
+    )
+    broker = FakeBroker()
+    publish(wire, broker, "by_key", N_PART)
+    assert broker.total_messages("by_key") == 100
+    for p in range(N_PART):
+        for msg in broker.partition_log("by_key", p):
+            assert partition_id_for(msg.key, N_PART) == p
